@@ -18,14 +18,22 @@ independent, exact in both engines), which is what lets the DuckDB
 twin replay all ``PR_ITERS`` rounds as unrolled CTEs and the result
 hash-check despite being an iterative float algorithm.
 
+The kernel, :func:`pagerank`, is the one PageRank implementation in
+the package: ``link_pagerank``/``frontier_authority_rank`` (link
+graph, unit weights) and ``textrank_keywords`` (word co-occurrence
+graph) call it too, and their oracles use the same
+``PAGERANK_CTES`` round chain.
+
 Scale posture (100 TB): the edge list shuffles once on (cust, supp)
 to aggregate weights; each iteration is an equi-join of edges against
 the n-row rank table keyed by src plus a keyed aggregation on dst —
-the standard Pregel-as-join shape. Rank state is checkpointed per
-round to keep lineage flat (same discipline as ``kmeans_fit``). The
-final top-N is TakeOrderedAndProject, never a global sort. The
-single driver scalar (node count, for the teleport constant) is the
-iterative-loop probe ``kmeans_fit``/``pq_train`` already model.
+the standard Pregel-as-join shape. The edge list and the normalized
+edge list are checkpointed once; the rounds chain lazily and only
+the final vector is checkpointed, so the number of blocking jobs
+does not depend on ``PR_ITERS``. The final top-N is
+TakeOrderedAndProject, never a global sort. The single driver scalar
+(node count, for the teleport constant) is the iterative-loop probe
+``kmeans_fit``/``pq_train`` already model.
 """
 
 from __future__ import annotations
@@ -69,43 +77,90 @@ def _trade_edges(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     return fwd.unionByName(rev)
 
 
+def pagerank(edges: DataFrame) -> DataFrame:
+    """The (node, r) weighted PageRank vector after ``PR_ITERS``
+    synchronous rounds over ``edges(src, dst, w)`` with a long weight
+    ``w``; the transition weight is ``p = w / Σ_src w``. Nodes are the
+    edge sources; a node with no in-edges holds no rank after round 1
+    and a node whose out-edges all point outside the graph leaks its
+    mass (no dangling redistribution — the oracles replay the same).
+
+    Checkpoint policy: the edge list and the normalized edge list are
+    checkpointed once (every round joins the latter, and without it
+    the out-weight join re-executes per round). Each round's rank is
+    consumed exactly once, by the next round's join, so the rounds
+    chain lazily into one job; only the final vector is checkpointed,
+    because callers consume it more than once (top-N + window;
+    authority join + rank shift). The blocking-job count therefore
+    does not depend on ``PR_ITERS``."""
+    edges = edges.localCheckpoint(eager=True)
+    outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
+    e = (
+        edges.join(outw, "src")
+        .select(
+            "src",
+            "dst",
+            (F.col("w").cast("double") / F.col("wout").cast("double")).alias(
+                "p"
+            ),
+        )
+        .localCheckpoint(eager=True)
+    )
+    nodes = edges.select("src").distinct()
+    n_nodes = nodes.count()
+    rank = nodes.select(
+        F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
+    )
+    teleport = (1.0 - PR_DAMP) / n_nodes
+    for _ in range(PR_ITERS):
+        contrib = e.join(rank, F.col("src") == F.col("node")).select(
+            "dst", (F.col("r") * F.col("p")).alias("c")
+        )
+        rank = contrib.groupBy(F.col("dst").alias("node")).agg(
+            (
+                F.lit(teleport)
+                + F.lit(PR_DAMP)
+                * (dec_qsum(F.col("c"), _Q9).cast("double") / F.lit(_Q9))
+            ).alias("r")
+        )
+    return rank.localCheckpoint(eager=True)
+
+
+#: DuckDB twin of :func:`pagerank`: the outw/e/nn/r0..r{PR_ITERS} CTE
+#: chain over an ``edges(src, dst, w)`` CTE the caller puts in scope
+#: first. ``r{PR_ITERS}`` holds the final (node, r) vector; each round
+#: replays the 1e-9-quantized BIGINT-summed update bit-for-bit.
+PAGERANK_CTES = """outw AS (
+    SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY src
+),
+e AS (
+    SELECT src, dst, CAST(w AS DOUBLE) / CAST(wout AS DOUBLE) AS p
+    FROM edges JOIN outw USING (src)
+),
+nn AS (SELECT CAST(count(DISTINCT src) AS BIGINT) AS n FROM edges),
+r0 AS (
+    SELECT DISTINCT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM edges
+),
+""" + ",\n".join(
+    f"""r{i} AS (
+    SELECT e.dst AS node,
+           CAST({(1.0 - PR_DAMP)!r} AS DOUBLE) / (SELECT n FROM nn)
+             + {PR_DAMP} * (sum(CAST(floor(r.r * e.p * 1000000000.0 + 0.5)
+                                     AS BIGINT)) / 1000000000.0) AS r
+    FROM e JOIN r{i - 1} r ON r.node = e.src
+    GROUP BY e.dst
+)"""
+    for i in range(1, PR_ITERS + 1)
+)
+
+
 def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``PR_TOPN`` nodes of the trade graph by weighted PageRank
     after ``PR_ITERS`` synchronous rounds. Emits the rank position,
     node type/id, and the (1e-9-deterministic) PageRank value."""
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    edges = _trade_edges(lineitem, orders).localCheckpoint(eager=True)
-    outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    e = edges.join(outw, "src").select(
-        "src",
-        "dst",
-        (F.col("w").cast("double") / F.col("wout").cast("double")).alias("p"),
-    )
-    nodes = edges.select("src").distinct()
-    n_nodes = nodes.count()
-    rank = nodes.select(
-        F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
-    ).localCheckpoint(eager=True)
-    teleport = (1.0 - PR_DAMP) / n_nodes
-    for _ in range(PR_ITERS):
-        contrib = e.join(rank, F.col("src") == F.col("node")).select(
-            "dst", (F.col("r") * F.col("p")).alias("c")
-        )
-        rank = (
-            contrib.groupBy(F.col("dst").alias("node"))
-            .agg(
-                (
-                    F.lit(teleport)
-                    + F.lit(PR_DAMP)
-                    * (
-                        dec_qsum(F.col("c"), _Q9).cast("double")
-                        / F.lit(_Q9)
-                    )
-                ).alias("r")
-            )
-            .localCheckpoint(eager=True)
-        )
+    rank = pagerank(_trade_edges(lineitem, orders))
     top = rank.orderBy(F.col("r").desc(), F.col("node")).limit(PR_TOPN)
     w_pos = Window.orderBy(F.col("r").desc(), F.col("node"))
     return top.withColumn("pos", F.row_number().over(w_pos)).select(
@@ -123,21 +178,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pr_round(i: int) -> str:
-    """One unrolled PageRank round as a DuckDB CTE (replays the
-    quantized-sum update bit-for-bit)."""
-    return f"""r{i} AS (
-    SELECT e.dst AS node,
-           CAST({(1.0 - PR_DAMP)!r} AS DOUBLE) / (SELECT n FROM nn)
-             + {PR_DAMP} * (sum(CAST(floor(r.r * e.p * 1000000000.0 + 0.5)
-                                     AS BIGINT)) / 1000000000.0) AS r
-    FROM e JOIN r{i - 1} r ON r.node = e.src
-    GROUP BY e.dst
-)"""
-
-
-_PR_ROUNDS_SQL = ",\n".join(_pr_round(i) for i in range(1, PR_ITERS + 1))
-
 PAGERANK_ORACLE = f"""
 WITH pairs AS (
     SELECT o_custkey AS cust, l_suppkey AS supp
@@ -152,16 +192,7 @@ edges AS (
     UNION ALL
     SELECT supp + {SUPPLIER_NODE_BASE} AS src, cust AS dst, w FROM wts
 ),
-outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY src),
-e AS (
-    SELECT src, dst, CAST(w AS DOUBLE) / CAST(wout AS DOUBLE) AS p
-    FROM edges JOIN outw USING (src)
-),
-nn AS (SELECT CAST(count(DISTINCT src) AS BIGINT) AS n FROM edges),
-r0 AS (
-    SELECT DISTINCT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM edges
-),
-{_PR_ROUNDS_SQL}
+{PAGERANK_CTES}
 SELECT CAST(pos AS INT) AS pos,
        CASE WHEN node >= {SUPPLIER_NODE_BASE} THEN 'supplier'
             ELSE 'customer' END AS node_type,

@@ -28,6 +28,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
+from bigdata_pipelines_aws_glue_spark.functions.rounding import stable_round
+from bigdata_pipelines_aws_glue_spark.operators.graph import (
+    PAGERANK_CTES,
+    PR_ITERS,
+    PR_TOPN,
+    _Q9,
+    pagerank,
+)
 from bigdata_pipelines_aws_glue_spark.operators.markup import (
     _HTML_CTE,
     synth_html,
@@ -223,13 +231,6 @@ GROUP BY host
 )
 
 
-#: PageRank geometry (matches ``operators/graph.py:43`` — same
-#: damping, same 1e-9 contribution quantization, same unrolled
-#: DuckDB round replay).
-PR_DAMP = 0.85
-PR_ITERS = 5
-PR_TOPN = 20
-_Q9 = 1e9
 #: internal doc-to-doc link target: the trailing id of an
 #: own-language ``/doc/{t}`` URL.
 _DOC_TARGET_RE = r"/doc/([0-9]+)$"
@@ -240,8 +241,9 @@ def _doc_edges(
 ) -> DataFrame:
     """DISTINCT (src, dst) doc-to-doc edges parsed back out of the
     synthesized HTML (extraction -> graph composition, not fixture
-    arithmetic), restricted to targets that exist in the corpus.
-    t1 == t2 collapses under distinct; t == doc_id is a legal
+    arithmetic), restricted to targets that exist in the corpus, each
+    with unit weight ``w = 1`` (the edge shape :func:`pagerank`
+    takes). t1 == t2 collapses under distinct; t == doc_id is a legal
     self-loop (doc 0).
 
     ``refs`` (optimization r16, guide §2.4): a caller that ALSO needs
@@ -284,75 +286,18 @@ def _doc_edges(
             .distinct()
         )
     targets = docs.select(F.col("doc_id").alias("dst"))
-    return edges.join(targets, "dst", "left_semi")
-
-
-def _pagerank_ranks(
-    spark: SparkSession, sf_dir: str, edges: DataFrame | None = None
-) -> DataFrame:
-    """The full (node, r) PageRank vector after ``PR_ITERS`` rounds
-    — factored out of :func:`link_pagerank` so
-    :func:`frontier_authority_rank` can spend the SAME attested rank
-    mass on frontier ordering instead of re-deriving it. Returns the
-    final round's checkpointed frame (nodes with inlinks; docs
-    outside it hold no rank — the documented leak semantics).
-    ``edges`` lets frontier_authority_rank pass the edge frame it
-    derived from its shared refs checkpoint (r16)."""
-    if edges is None:
-        edges = _doc_edges(spark, sf_dir)
-    edges = edges.localCheckpoint(eager=True)
-    from bigdata_pipelines_aws_glue_spark.functions.rounding import dec_qsum
-
-    outd = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # checkpoint the normalized edge list too: every round joins it,
-    # and without this the outdegree join re-executes per round
-    # (5 extra shuffles over the constant graph)
-    e = (
-        edges.join(outd, "src")
-        .select(
-            "src",
-            "dst",
-            (F.lit(1.0) / F.col("deg").cast("double")).alias("p"),
-        )
-        .localCheckpoint(eager=True)
+    return edges.join(targets, "dst", "left_semi").select(
+        "src", "dst", F.lit(1).cast("long").alias("w")
     )
-    nodes = edges.select("src").distinct()
-    n_nodes = nodes.count()
-    # init vector stays lazy too (r15): consumed once, by round 1's
-    # join, and it reads the checkpointed edge frame — one fewer
-    # blocking job, same distinct-computation count.
-    rank = nodes.select(
-        F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
-    )
-    teleport = (1.0 - PR_DAMP) / n_nodes
-    # r15: rounds chain LAZILY — each round's rank is consumed exactly
-    # once (by the next round's join), so the per-round eager
-    # checkpoint bought nothing but a blocking job; the 5 joins+aggs
-    # now run inside one job against the checkpointed edge frame
-    # (measured 1.70 s -> 1.42 s at sf0.1, rank vectors identical).
-    # Only the FINAL vector is checkpointed, because callers consume
-    # it more than once (top-N + window; authority join + rank_shift).
-    for _ in range(PR_ITERS):
-        contrib = e.join(rank, F.col("src") == F.col("node")).select(
-            "dst", (F.col("r") * F.col("p")).alias("c")
-        )
-        rank = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.lit(teleport)
-                + F.lit(PR_DAMP)
-                * (dec_qsum(F.col("c"), _Q9).cast("double") / F.lit(_Q9))
-            ).alias("r")
-        )
-    return rank.localCheckpoint(eager=True)
 
 
 def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``PR_TOPN`` documents by PageRank over the extracted link
     graph after ``PR_ITERS`` synchronous rounds — the HTML -> links
     -> graph -> quality-prior composition a crawl pipeline runs.
-    Same engine-exact kernel as ``pagerank_trade_graph``
-    (``operators/graph.py:72``): contributions quantize to 1e-9
-    before the sum, the oracle unrolls the rounds as CTEs.
+    The kernel is :func:`pagerank` over unit-weight edges (so
+    ``p = 1/outdeg``): contributions quantize to 1e-9 before the sum,
+    the oracle unrolls the rounds with ``PAGERANK_CTES``.
 
     Simplification shared with the trade-graph form (deliberate,
     replayed identically by the oracle): no dangling-mass
@@ -361,11 +306,7 @@ def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf<=0.01 about half the mod-997 targets fall outside the corpus
     (dropped by the existence semi-join), so the graph genuinely
     exercises both cases."""
-    rank = _pagerank_ranks(spark, sf_dir)
-    from bigdata_pipelines_aws_glue_spark.functions.rounding import (
-        stable_round,
-    )
-
+    rank = pagerank(_doc_edges(spark, sf_dir))
     top = rank.orderBy(F.col("r").desc(), F.col("node")).limit(PR_TOPN)
     w_pos = Window.orderBy(F.col("r").desc(), F.col("node"))
     return top.withColumn("pos", F.row_number().over(w_pos)).select(
@@ -375,21 +316,10 @@ def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpr_round(i: int) -> str:
-    return f"""r{i} AS (
-    SELECT e.dst AS node,
-           CAST({(1.0 - PR_DAMP)!r} AS DOUBLE) / (SELECT n FROM nn)
-             + {PR_DAMP} * (sum(CAST(floor(r.r * e.p * 1000000000.0 + 0.5)
-                                     AS BIGINT)) / 1000000000.0) AS r
-    FROM e JOIN r{i - 1} r ON r.node = e.src
-    GROUP BY e.dst
-)"""
-
-
 #: just the extracted+existence-filtered edge list (raw_edges,
-#: edges) — the prefix the graph oracles (LPA, k-core) share
-#: without PageRank's rank CTEs. MATERIALIZED: edges is referenced
-#: 2-6x downstream (both UNION orientations, outd/e/nn/r0) and a
+#: edges, unit weight w) — the prefix the graph oracles (LPA, k-core)
+#: share without PageRank's rank CTEs. MATERIALIZED: edges is referenced
+#: 2-6x downstream (both UNION orientations, outw/e/nn/r0) and a
 #: non-materialized chain re-inlines the lh regex extraction per
 #: reference (the standing DuckDB CTE rule).
 _EDGES_CHAIN = f""",
@@ -413,7 +343,7 @@ raw_edges AS MATERIALIZED (
               = u.lang || '.example.test'
 ),
 edges AS MATERIALIZED (
-    SELECT src, dst FROM raw_edges
+    SELECT src, dst, CAST(1 AS BIGINT) AS w FROM raw_edges
     WHERE dst IN (SELECT doc_id FROM documents)
 )"""
 
@@ -431,24 +361,10 @@ ue AS MATERIALIZED (
 )"""
 
 
-#: the PageRank oracle CTE chain (edges prefix + outd/e/nn/r0 +
-#: the unrolled r1..r{PR_ITERS} rounds) — shared by
-#: ``LINK_PAGERANK_ORACLE`` and the authority-ordered frontier so
-#: both replay the identical kernel.
-_PR_CHAIN = (
-    _EDGES_CHAIN
-    + f""",
-outd AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-e AS (
-    SELECT src, dst, 1.0 / CAST(deg AS DOUBLE) AS p
-    FROM edges JOIN outd USING (src)
-),
-nn AS (SELECT CAST(count(DISTINCT src) AS BIGINT) AS n FROM edges),
-r0 AS (
-    SELECT DISTINCT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM edges
-),
-{",".join(_lpr_round(i) for i in range(1, PR_ITERS + 1))}"""
-)
+#: the PageRank oracle CTE chain (edges prefix + ``PAGERANK_CTES``)
+#: — shared by ``LINK_PAGERANK_ORACLE`` and the authority-ordered
+#: frontier so both replay the identical kernel.
+_PR_CHAIN = _EDGES_CHAIN + ",\n" + PAGERANK_CTES
 
 
 LINK_PAGERANK_ORACLE = (
@@ -925,7 +841,7 @@ def frontier_authority_rank(
     ``PR(doc) / outdeg(doc)`` — instead of the raw reference count
     ``crawl_frontier`` ranks by. Makes ``link_pagerank``'s vector
     load-bearing in the crawl stack: the same attested kernel
-    (:func:`_pagerank_ranks`) feeds the scheduler, and
+    (:func:`pagerank` over :func:`_doc_edges`) feeds the scheduler, and
     ``rank_shift`` exposes exactly where authority overrules demand
     (a URL cited once by a high-rank page outranks one cited twice
     by rank-less leaves).
@@ -958,9 +874,7 @@ def frontier_authority_rank(
     # now feeds both consumers — within-query reuse only, nothing
     # crosses invocations.
     refs = _http_refs(spark, sf_dir).localCheckpoint(eager=True)
-    ranks = _pagerank_ranks(
-        spark, sf_dir, edges=_doc_edges(spark, sf_dir, refs=refs)
-    )
+    ranks = pagerank(_doc_edges(spark, sf_dir, refs=refs))
     frontier = _frontier_refs(spark, sf_dir, refs=refs)
     contrib = frontier.join(
         ranks, frontier["doc_id"] == ranks["node"], "left"

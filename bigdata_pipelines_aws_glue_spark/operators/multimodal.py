@@ -460,7 +460,6 @@ def sample_frames(payload: bytes, n_frames: int = 4) -> list[bytes]:
     ]
 
 
-RESIZED_SCHEMA = "doc_id long, out_w int, out_h int, mean_px double"
 RESIZED_ORACLE_SCHEMA = (
     "doc_id long, codec int, out_w int, out_h int, px_sum long, src_sum long"
 )
@@ -473,19 +472,6 @@ FRAMES_SCHEMA = (
     "doc_id long, frame_idx int, frame_bytes int, payload_bytes int, "
     "frame_digest string"
 )
-
-
-def resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decode payload -> real pixel array ->
-    nearest-neighbor resize to 16x16 -> summary stat."""
-    for pdf in batches:
-        out_rows = []
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            small = resize_image(decode_image(p), 16, 16)
-            out_rows.append((doc_id, 16, 16, float(small.mean())))
-        yield pd.DataFrame(
-            out_rows, columns=["doc_id", "out_w", "out_h", "mean_px"]
-        )
 
 
 def resize_oracle_batch(

@@ -796,6 +796,88 @@ KMEANS_K = 8
 KMEANS_ITERS = 5
 
 
+def _lloyd(
+    blocks: DataFrame,
+    k: int,
+    n_iter: int,
+    inertia_out: list | None = None,
+) -> DataFrame:
+    """The one Lloyd's k-means kernel: deterministic quantized-mean
+    Lloyd's over ``blocks(vid, block, bv)``, each ``block`` its own
+    k-means problem — ``block`` is just another grouping key, exactly
+    as the DuckDB replay (``_lloyd_ctes``) models it, so PQ's m
+    subspaces cost one training run and full-vector k-means is the
+    one-block case.
+
+    Deterministic and cross-engine reproducible: per-block seeds are
+    the k lowest-vid vectors, assignment ties break on (in-order
+    sqdist, code_id), and the update is a 1e-9-QUANTIZED mean
+    (decimal-summed, so independent of partial-aggregation order and
+    bit-identical to the DuckDB replay). Each round: assignment =
+    argmin squared distance against the BROADCAST codebook (the corpus
+    never shuffles for assignment); update = posexplode +
+    (block, code, dim) mean, shuffling only partial-sum triples.
+
+    Checkpoint policy: the codebook is checkpointed at the seed and
+    after every round, so each round broadcasts a materialized
+    k-rows-per-block table and the audit pass below reads it without
+    recomputing the round. Codes that lose all members drop out
+    (standard Lloyd's degeneracy). Returns (block, code_id, cvec,
+    n_assigned).
+
+    ``inertia_out``: audit mode — when a list is passed, the inertia
+    (Σ over vectors and blocks of the min squared distance, one
+    scalar) is collected after every update and appended, adding one
+    extra assignment pass per round."""
+    seed_w = Window.partitionBy("block").orderBy("vid")
+    cb = (
+        blocks.withColumn("code_id", F.row_number().over(seed_w))
+        .filter(F.col("code_id") <= k)
+        .select("block", "code_id", F.col("bv").alias("cvec"))
+        .localCheckpoint(eager=True)
+    )
+    asg_w = Window.partitionBy("vid", "block").orderBy("d", "code_id")
+    for _ in range(n_iter):
+        assigned = (
+            blocks.join(F.broadcast(cb), "block")
+            .withColumn("d", _sqdist(F.col("bv"), F.col("cvec")))
+            .withColumn("rn", F.row_number().over(asg_w))
+            .filter(F.col("rn") == 1)
+        )
+        cb = (
+            assigned.select(
+                "block", "code_id", F.posexplode("bv").alias("dim", "val")
+            )
+            .groupBy("block", "code_id", "dim")
+            .agg(
+                (
+                    (dec_qsum(F.col("val"), 1e9).cast("double") / F.lit(1e9))
+                    / F.count(F.lit(1))
+                ).alias("cv"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .groupBy("block", "code_id")
+            .agg(
+                F.transform(
+                    F.sort_array(
+                        F.collect_list(F.struct(F.col("dim"), F.col("cv")))
+                    ),
+                    lambda s: s.getField("cv"),
+                ).alias("cvec"),
+                F.min("n").alias("n_assigned"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        if inertia_out is not None:
+            d = (
+                blocks.join(F.broadcast(cb.select("block", "cvec")), "block")
+                .groupBy("vid", "block")
+                .agg(F.min(_sqdist(F.col("bv"), F.col("cvec"))).alias("d"))
+            )
+            inertia_out.append(d.agg(F.sum("d")).collect()[0][0])
+    return cb
+
+
 def kmeans_fit(
     vectors: DataFrame,
     k: int = KMEANS_K,
@@ -805,84 +887,26 @@ def kmeans_fit(
     inertia_out: list | None = None,
 ) -> DataFrame:
     """Lloyd's k-means on DataFrames — the training step behind IVF
-    cell lists (``ivf_topk`` consumes centroids; this produces them).
-
-    Deterministic — and cross-engine reproducible: seeds are the k
-    lowest-id vectors, assignment ties break on (distance, cluster_id),
-    and the centroid update is a 1e-9-QUANTIZED mean (long-summed, so
-    it is independent of partial-aggregation order and bit-identical
-    to a DuckDB replay — the same recipe as ``embedding_centroids``).
-    That determinism is what lets ``pq_topk``/``ivfpq_topk``, whose
-    codebooks this trains, carry full hash oracles
-    (``PQ_TOPK_ORACLE``) instead of rows-only checks. Each iteration:
-    assignment = argmin squared distance against the BROADCAST k-row
-    centroid table (the corpus never shuffles for assignment); update =
-    posexplode + (cluster, dim) mean, shuffling only (cluster, dim,
-    partial-sum) triples. Centroid state is k rows — checkpointed per
-    round so the lineage stays flat. Clusters that lose all members
-    drop out (standard Lloyd's degeneracy; k is then effectively
-    smaller). Returns (cluster_id, centroid, n_assigned).
+    cell lists (``ivf_topk`` consumes centroids; this produces them):
+    the :func:`_lloyd` kernel over one block holding the whole
+    vector. Deterministic and cross-engine reproducible (lowest-id
+    seeds, (distance, cluster_id) tie-breaks, 1e-9-quantized mean),
+    which is what lets ``kmeans_embeddings`` carry a full hash
+    oracle. Returns (cluster_id, centroid, n_assigned).
 
     ``inertia_out``: audit mode — when a list is passed, the inertia
     (one scalar) is collected after every update and appended, adding
     one extra assignment pass per iteration. Training runs leave it
     None; ``kmeans_convergence`` uses it to attest monotonicity."""
-    from pyspark.sql import Window
-
-    v = vectors.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
+    blocks = vectors.select(
+        F.col(id_col).alias("vid"),
+        F.lit(0).alias("block"),
+        _as_double(F.col(vec_col)).alias("bv"),
     )
-    seed_w = Window.orderBy("vid")
-    cent = (
-        v.orderBy("vid")
-        .limit(k)
-        .select(
-            F.row_number().over(seed_w).alias("cluster_id"),
-            F.col("v").alias("cv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy("vid").orderBy("d", "cluster_id")
-    for _ in range(n_iter):
-        assigned = (
-            v.crossJoin(F.broadcast(cent))
-            .withColumn("d", _sqdist(F.col("v"), F.col("cv")))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-        )
-        cent = (
-            assigned.select(
-                "cluster_id", F.posexplode("v").alias("dim", "val")
-            )
-            .groupBy("cluster_id", "dim")
-            .agg(
-                (
-                    (dec_qsum(F.col("val"), 1e9).cast("double") / F.lit(1e9))
-                    / F.count(F.lit(1))
-                ).alias("m"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .groupBy("cluster_id")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("dim"), F.col("m")))
-                    ),
-                    lambda s: s.getField("m"),
-                ).alias("cv"),
-                F.first("n").alias("n_assigned"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if inertia_out is not None:
-            d = (
-                v.crossJoin(F.broadcast(cent.select("cv")))
-                .groupBy("vid")
-                .agg(F.min(_sqdist(F.col("v"), F.col("cv"))).alias("d"))
-            )
-            inertia_out.append(d.agg(F.sum("d")).collect()[0][0])
-    return cent.select(
-        "cluster_id", F.col("cv").alias("centroid"), "n_assigned"
+    return _lloyd(blocks, k, n_iter, inertia_out).select(
+        F.col("code_id").alias("cluster_id"),
+        F.col("cvec").alias("centroid"),
+        "n_assigned",
     )
 
 
@@ -900,8 +924,8 @@ def kmeans_inertia(vectors: DataFrame, centroids: DataFrame) -> float:
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-vector Lloyd's clustering certificate: (cluster_id,
     n_assigned, centroid_norm) after KMEANS_ITERS rounds. HASH-ORACLED
-    since round 6: the same unrolled-CTE replay technique as the PQ
-    codebooks (``_pq_ctes``) — deterministic lowest-vid seeding,
+    since round 6: the same unrolled-CTE replay as the PQ codebooks
+    (``_lloyd_ctes``) — deterministic lowest-vid seeding,
     (distance, cluster_id) tie-breaks, and the 1e-9-quantized
     decimal-summed centroid mean make every round bit-reproducible in
     DuckDB (``KMEANS_EMBEDDINGS_ORACLE``), so the centroids themselves
@@ -915,62 +939,79 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_ctes(k: int = KMEANS_K, n_iter: int = KMEANS_ITERS) -> str:
-    """CTE prefix replaying :func:`kmeans_fit` bit-for-bit in DuckDB —
-    the full-vector sibling of ``_pq_ctes`` (same seeding, tie-break,
-    and quantized-mean conventions; ``list_dot_product(df, df)``
-    reproduces ``_sqdist``'s in-order fold). Yields ``c{n_iter}``
-    with (cluster_id, cvec, n_assigned)."""
+def _assign_cte(name: str, codebook: str, where: str = "") -> str:
+    """``name``: every (vid, block) row of ``blocks`` against every
+    code of ``codebook`` in its block, ranked ``rn`` by (in-order
+    sqdist, code_id) exactly like the Spark window."""
+    return f"""{name} AS (
+    SELECT vid, block, bv, code_id,
+           row_number() OVER (PARTITION BY vid, block
+                              ORDER BY list_dot_product(df, df), code_id)
+             AS rn
+    FROM (
+        SELECT bl.vid, bl.block, bl.bv, cb.code_id,
+               list_transform(generate_series(1, len(bl.bv)),
+                              x -> bl.bv[x] - cb.cvec[x]) AS df
+        FROM blocks bl JOIN {codebook} cb USING (block){where})
+)"""
+
+
+def _lloyd_ctes(k: int, n_iter: int, sample_mod_sql: str | None = None) -> str:
+    """CTEs replaying :func:`_lloyd` bit-for-bit in DuckDB over a
+    ``blocks(vid, block, bv)`` CTE already in scope; ``cb{n_iter}``
+    holds (block, code_id, cvec, n_assigned). With ``sample_mod_sql``
+    (a SQL expression for the sampling modulus) the seeds and the
+    rounds see only vectors with ``vid % mod == 0``.
+
+    - ``cb0``: seeds = the k lowest-vid rows per block;
+    - ``asg{i}``/``cb{i}``: n_iter unrolled rounds — argmin, then
+      the 1e-9-quantized BIGINT-summed mean.
+
+    ``list_dot_product(df, df)`` reproduces ``_sqdist``'s in-order
+    fold (the proven LSH-oracle precedent)."""
+    where = f" WHERE bl.vid % {sample_mod_sql} = 0" if sample_mod_sql else ""
     ctes = [
-        """v AS (
-    SELECT vec_id AS vid, embedding::DOUBLE[] AS e FROM embeddings
-)""",
-        f"""c0 AS (
-    SELECT cluster_id, e AS cvec FROM (
-        SELECT e, row_number() OVER (ORDER BY vid) AS cluster_id FROM v)
-    WHERE cluster_id <= {k}
-)""",
+        f"""cb0 AS (
+    SELECT block, code_id, bv AS cvec FROM (
+        SELECT block, bv,
+               row_number() OVER (PARTITION BY block ORDER BY vid) AS code_id
+        FROM blocks bl{where})
+    WHERE code_id <= {k}
+)"""
     ]
     for i in range(1, n_iter + 1):
+        ctes.append(_assign_cte(f"asg{i}", f"cb{i - 1}", where))
         ctes.append(
-            f"""asg{i} AS (
-    SELECT vid, e, cluster_id,
-           row_number() OVER (PARTITION BY vid
-                              ORDER BY list_dot_product(df, df),
-                                       cluster_id) AS rn
-    FROM (
-        SELECT v.vid, v.e, c.cluster_id,
-               list_transform(generate_series(1, len(v.e)),
-                              x -> v.e[x] - c.cvec[x]) AS df
-        FROM v CROSS JOIN c{i - 1} c)
-)"""
-        )
-        ctes.append(
-            f"""c{i} AS (
-    SELECT cluster_id, list(cv ORDER BY dim) AS cvec,
+            f"""cb{i} AS (
+    SELECT block, code_id, list(cv ORDER BY dim) AS cvec,
            min(n) AS n_assigned
     FROM (
-        SELECT cluster_id, dim,
+        SELECT block, code_id, dim,
                (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
                   / 1000000000.0) / count(*) AS cv,
                count(*) AS n
         FROM (
-            SELECT cluster_id, generate_subscripts(e, 1) AS dim,
-                   unnest(e) AS val
+            SELECT block, code_id,
+                   generate_subscripts(bv, 1) AS dim,
+                   unnest(bv) AS val
             FROM asg{i} WHERE rn = 1)
-        GROUP BY cluster_id, dim)
-    GROUP BY cluster_id
+        GROUP BY block, code_id, dim)
+    GROUP BY block, code_id
 )"""
         )
     return ",\n".join(ctes)
 
 
-KMEANS_EMBEDDINGS_ORACLE = f"""WITH {_kmeans_ctes()}
-SELECT CAST(cluster_id AS INT) AS cluster_id,
+KMEANS_EMBEDDINGS_ORACLE = f"""WITH blocks AS (
+    SELECT vec_id AS vid, 0 AS block, embedding::DOUBLE[] AS bv
+    FROM embeddings
+),
+{_lloyd_ctes(KMEANS_K, KMEANS_ITERS)}
+SELECT CAST(code_id AS INT) AS cluster_id,
        CAST(n_assigned AS BIGINT) AS n_assigned,
        floor(sqrt(list_dot_product(cvec, cvec)) * 1000000.0 + 0.5)
          / 1000000.0 AS centroid_norm
-FROM c{KMEANS_ITERS}
+FROM cb{KMEANS_ITERS}
 """
 
 
@@ -1142,65 +1183,19 @@ def pq_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Product-quantization codebooks: deterministic quantized-mean
-    Lloyd's over ALL subspaces in one keyed pass — ``block`` is just
-    another grouping key, exactly as the DuckDB replay
-    (``_pq_ctes``) models it, so m subspaces cost one training run
-    instead of m sequential ones (the per-block ``kmeans_fit`` loop
-    this replaces checkpointed 4x as often and dominated pq_topk's
-    runtime). Identical output by construction: per-block seeds are
-    the k lowest-vid sub-vectors, assignment ties break on
-    (in-order sqdist, code_id), and the update is the
-    1e-9-quantized long-summed mean. Returns (block, code_id, cvec)
-    — m*k rows, a broadcast table at any corpus size. The one-row
-    dim probe is fine here: PQ training is already an iterative
-    driver-side loop (like k-means itself)."""
+    """Product-quantization codebooks: the :func:`_lloyd` kernel over
+    all m contiguous subspaces in one keyed pass (one training run,
+    not m sequential ones). Returns (block, code_id, cvec,
+    n_assigned) — m*k rows, a broadcast table at any corpus size. The
+    one-row dim probe is fine here: PQ training is already an
+    iterative driver-side loop (like k-means itself)."""
     v = vectors.select(
         F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
     )
     dim = len(v.select("v").first()["v"])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    blocks = _vector_blocks(v, "vid", "v", m, sub)
-    seed_w = Window.partitionBy("block").orderBy("vid")
-    cb = (
-        blocks.withColumn("code_id", F.row_number().over(seed_w))
-        .filter(F.col("code_id") <= k)
-        .select("block", "code_id", F.col("bv").alias("cvec"))
-        .localCheckpoint(eager=True)
-    )
-    asg_w = Window.partitionBy("vid", "block").orderBy("d", "code_id")
-    for _ in range(PQ_ITERS):
-        assigned = (
-            blocks.join(F.broadcast(cb), "block")
-            .withColumn("d", _sqdist(F.col("bv"), F.col("cvec")))
-            .withColumn("rn", F.row_number().over(asg_w))
-            .filter(F.col("rn") == 1)
-        )
-        cb = (
-            assigned.select(
-                "block", "code_id", F.posexplode("bv").alias("dim", "val")
-            )
-            .groupBy("block", "code_id", "dim")
-            .agg(
-                (
-                    (dec_qsum(F.col("val"), 1e9).cast("double") / F.lit(1e9))
-                    / F.count(F.lit(1))
-                ).alias("cv")
-            )
-            .groupBy("block", "code_id")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("dim"), F.col("cv")))
-                    ),
-                    lambda s: s.getField("cv"),
-                ).alias("cvec")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return cb
+    return _lloyd(_vector_blocks(v, "vid", "v", m, dim // m), k, PQ_ITERS)
 
 
 def pq_encode(
@@ -1241,7 +1236,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance computation). The per-query lookup table is m*k rows —
     broadcast — so scoring scans only the ~2.5-byte codes, never the
     vectors. Hash-checked end-to-end: the quantized-mean k-means
-    (:func:`kmeans_fit`) makes the codebooks cross-engine
+    (:func:`_lloyd`) makes the codebooks cross-engine
     deterministic, and per-block ADC distances are 1e-9-quantized
     longs so their sum is aggregation-order independent — the DuckDB
     twin (``PQ_TOPK_ORACLE``) replays train+encode+ADC bit-for-bit.
@@ -1481,25 +1476,14 @@ def _pq_ctes(sample_mod_sql: str | None = None) -> str:
 
     - ``blocks``: contiguous sub-vector slices (1-based list_slice ==
       ``F.slice``);
-    - ``cb0``: seeds = the PQ_K lowest-vid sub-vectors per block (the
-      ``kmeans_fit`` seeding rule);
-    - ``asg{{i}}``/``cb{{i}}``: PQ_ITERS unrolled Lloyd's rounds —
-      argmin on (in-order sqdist, code_id) exactly like the Spark
-      window, then the 1e-9-quantized BIGINT-summed mean;
+    - ``cb0``..``cb{PQ_ITERS}``: the :func:`_lloyd_ctes` training
+      rounds;
     - ``ncodes``: final assignment (the encode step);
     - ``adc``: per-(query, block, code) distances as 1e-9 longs, so
       the ADC sum is exact in any aggregation order.
 
-    ``list_dot_product(df, df)`` reproduces ``_sqdist``'s in-order
-    fold (the proven LSH-oracle precedent). Assumes ``vn`` (vec_id, e,
-    nrm) is already in scope."""
+    Assumes ``vn`` (vec_id, e, nrm) is already in scope."""
     sub = f"(len(e) // {PQ_M})"
-    seed_where = (
-        f" WHERE vid % {sample_mod_sql} = 0" if sample_mod_sql else ""
-    )
-    train_where = (
-        f" WHERE bl.vid % {sample_mod_sql} = 0" if sample_mod_sql else ""
-    )
     ctes = [
         f"""blocks AS (
     SELECT vec_id AS vid, bl.block,
@@ -1507,46 +1491,9 @@ def _pq_ctes(sample_mod_sql: str | None = None) -> str:
     FROM vn CROSS JOIN
          (SELECT unnest(generate_series(0, {PQ_M - 1})) AS block) bl
 )""",
-        f"""cb0 AS (
-    SELECT block, code_id, bv AS cvec FROM (
-        SELECT block, bv,
-               row_number() OVER (PARTITION BY block ORDER BY vid) AS code_id
-        FROM blocks{seed_where})
-    WHERE code_id <= {PQ_K}
-)""",
+        _lloyd_ctes(PQ_K, PQ_ITERS, sample_mod_sql),
+        _assign_cte("enc", f"cb{PQ_ITERS}"),
     ]
-
-    def _assign(name: str, codebook: str, extra_where: str = "") -> str:
-        return f"""{name} AS (
-    SELECT vid, block, bv, code_id,
-           row_number() OVER (PARTITION BY vid, block
-                              ORDER BY list_dot_product(df, df), code_id)
-             AS rn
-    FROM (
-        SELECT bl.vid, bl.block, bl.bv, cb.code_id,
-               list_transform(generate_series(1, len(bl.bv)),
-                              x -> bl.bv[x] - cb.cvec[x]) AS df
-        FROM blocks bl JOIN {codebook} cb USING (block){extra_where})
-)"""
-
-    for i in range(1, PQ_ITERS + 1):
-        ctes.append(_assign(f"asg{i}", f"cb{i - 1}", train_where))
-        ctes.append(
-            f"""cb{i} AS (
-    SELECT block, code_id, list(cv ORDER BY dim) AS cvec FROM (
-        SELECT block, code_id, dim,
-               (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
-                  / 1000000000.0) / count(*) AS cv
-        FROM (
-            SELECT block, code_id,
-                   generate_subscripts(bv, 1) AS dim,
-                   unnest(bv) AS val
-            FROM asg{i} WHERE rn = 1)
-        GROUP BY block, code_id, dim)
-    GROUP BY block, code_id
-)"""
-        )
-    ctes.append(_assign("enc", f"cb{PQ_ITERS}"))
     ctes.append(
         "ncodes AS (\n"
         "    SELECT vid AS neighbor_id, block, code_id FROM enc WHERE rn = 1\n)"

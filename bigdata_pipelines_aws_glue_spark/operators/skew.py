@@ -12,7 +12,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -24,13 +24,6 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def salt_col(buckets: int) -> Column:
-    """Per-row salt bucket: spreads a hot key over ``buckets``
-    reducers. Pair with two-phase aggregation: partial agg on
-    (key, salt), final agg on key."""
-    return F.pmod(F.monotonically_increasing_id(), F.lit(buckets))
 
 
 def salted_skew_join(

@@ -286,11 +286,6 @@ FROM walk WHERE rn = n
 #: engines with zero quantization.
 CROSTON_ALPHA = 0.25
 
-_CROSTON_SCHEMA = (
-    "l_partkey long, n_demand_weeks int, size_level double, "
-    "interval_level double, demand_rate double, intermittent boolean"
-)
-
 
 def croston_demand_forecast(
     spark: SparkSession, sf_dir: str

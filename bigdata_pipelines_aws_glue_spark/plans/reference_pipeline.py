@@ -43,16 +43,6 @@ from bigdata_pipelines_aws_glue_spark.sources.writers import (
 )
 
 # Reference-declared schemas (glue_job.py:35-53).
-TRANSACTION_SCHEMA = StructType(
-    [
-        StructField("transaction_id", StringType(), True),
-        StructField("user_id", StringType(), True),
-        StructField("product_id", StringType(), True),
-        StructField("amount", FloatType(), True),
-        StructField("currency", StringType(), True),
-        StructField("timestamp", StringType(), True),  # parsed later
-    ]
-)
 CURRENCY_RATES_SCHEMA = StructType(
     [
         StructField("currency", StringType(), True),

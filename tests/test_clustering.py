@@ -44,7 +44,7 @@ def test_assign_clusters_singletons_and_canonical(spark):
         7: (7, True), 9: (9, True),
     }
     kept = [d for d, (_, canon) in out.items() if canon]
-    assert kept == sorted(kept)
+    assert sorted(kept) == [1, 7, 9]
 
 
 def test_cc_label_columns_only_in_shuffle(spark):

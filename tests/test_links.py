@@ -78,8 +78,8 @@ def test_host_degree_consistency(spark, sf_dir):
 
 
 def test_link_pagerank_invariants(spark, sf_dir):
+    from bigdata_pipelines_aws_glue_spark.operators.graph import PR_TOPN
     from bigdata_pipelines_aws_glue_spark.operators.links import (
-        PR_TOPN,
         link_pagerank,
     )
 
@@ -177,8 +177,9 @@ def test_frontier_authority_matches_rank_vector_replay(spark, sf_dir):
     the Spark-side n_http == len of _http_links — re-derived here
     from extract_links' n_http attested column), so the frontier's
     quantized authority is recomputable exactly."""
+    from bigdata_pipelines_aws_glue_spark.operators.graph import pagerank
     from bigdata_pipelines_aws_glue_spark.operators.links import (
-        _pagerank_ranks,
+        _doc_edges,
         extract_links,
         frontier_authority_rank,
     )
@@ -189,7 +190,8 @@ def test_frontier_authority_matches_rank_vector_replay(spark, sf_dir):
     ).collect()
     doc_ids = {r["doc_id"] for r in docs}
     ranks = {
-        r["node"]: r["r"] for r in _pagerank_ranks(spark, sf_dir).collect()
+        r["node"]: r["r"]
+        for r in pagerank(_doc_edges(spark, sf_dir)).collect()
     }
     n_http = {
         r["doc_id"]: r["n_http"]

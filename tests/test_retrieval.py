@@ -63,10 +63,12 @@ def test_textrank_python_replay(spark, sf_dir):
     agree exactly."""
     from collections import defaultdict
 
+    from bigdata_pipelines_aws_glue_spark.operators.graph import (
+        PR_DAMP,
+        PR_ITERS,
+        PR_TOPN,
+    )
     from bigdata_pipelines_aws_glue_spark.operators.text import (
-        TEXTRANK_DAMP,
-        TEXTRANK_ITERS,
-        TEXTRANK_TOPN,
         textrank_keywords,
     )
     from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
@@ -85,13 +87,13 @@ def test_textrank_python_replay(spark, sf_dir):
     nodes = sorted(outw)
     n = len(nodes)
     r = {v: 1.0 / n for v in nodes}
-    tele = (1.0 - TEXTRANK_DAMP) / n
-    for _ in range(TEXTRANK_ITERS):
+    tele = (1.0 - PR_DAMP) / n
+    for _ in range(PR_ITERS):
         acc = defaultdict(int)
         for (a, b), c in w.items():
             acc[b] += math.floor(r[a] * (c / outw[a]) * 1e9 + 0.5)
-        r = {v: tele + TEXTRANK_DAMP * (acc[v] / 1e9) for v in nodes}
-    expect = sorted(r.items(), key=lambda kv: (-kv[1], kv[0]))[:TEXTRANK_TOPN]
+        r = {v: tele + PR_DAMP * (acc[v] / 1e9) for v in nodes}
+    expect = sorted(r.items(), key=lambda kv: (-kv[1], kv[0]))[:PR_TOPN]
 
     got = sorted(textrank_keywords(spark, sf_dir).collect(),
                  key=lambda x: x["pos"])
@@ -99,6 +101,6 @@ def test_textrank_python_replay(spark, sf_dir):
     for g, (_, score) in zip(got, expect):
         assert abs(g["textrank"] - score) < 2e-9
     # ranks are 1..TOPN and scores nonincreasing
-    assert [g["pos"] for g in got] == list(range(1, TEXTRANK_TOPN + 1))
+    assert [g["pos"] for g in got] == list(range(1, PR_TOPN + 1))
     scores = [g["textrank"] for g in got]
     assert all(a >= b for a, b in zip(scores, scores[1:]))

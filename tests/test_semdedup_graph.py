@@ -59,6 +59,33 @@ def test_pagerank_top_nodes_shape_and_mass(spark, sf_dir):
     assert rows[0].node_type == "supplier"
 
 
+def test_pagerank_checkpoints_do_not_grow_with_rounds(spark, monkeypatch):
+    """The kernel checkpoints the edge lists and the final vector
+    only: a per-round checkpoint would make the 5-round run take more
+    blocking jobs than the 1-round run."""
+    from bigdata_pipelines_aws_glue_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [(1, 2, 3), (2, 1, 3), (2, 3, 1), (3, 1, 2), (3, 2, 5)],
+        "src long, dst long, w long",
+    )
+    real = type(edges).localCheckpoint
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", counting)
+    counts = {}
+    for rounds in (1, 5):
+        monkeypatch.setattr(graph, "PR_ITERS", rounds)
+        calls.clear()
+        assert len(graph.pagerank(edges).collect()) == 3
+        counts[rounds] = len(calls)
+    assert counts[1] == counts[5] > 0
+
+
 def test_dq_expectations_flags_planted_violations(spark, tmp_path):
     """On a deliberately corrupted mini-corpus every targeted check
     must flip to failed with the right violation count (the corpus
