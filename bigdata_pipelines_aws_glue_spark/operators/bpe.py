@@ -19,11 +19,16 @@ pairs — the classic in-memory state of every BPE trainer, ~alphabet²
 at the start and shrinking), never corpus or vocab rows; the merge
 application is map-only (a JVM-side ``F.aggregate`` fold — no Python
 UDF). Vocab state stays a LAZY fold chain over the one eagerly
-checkpointed base vocabulary (optimization r16, guide §2.4/§5): with
-the base materialized, re-running k tiny array folds per round is
-far cheaper than the k eager-checkpoint blocking jobs the r15 form
-paid — per-round blocking jobs drop 3 -> 1 in the audit query and
-2 -> 1 in the silent trainer.
+checkpointed base vocabulary: with the base materialized, re-running
+k tiny array folds per round is far cheaper than an eager checkpoint
+per round, so each round is one blocking job (the pair-table fetch).
+
+One trainer, one encoder: :func:`_train_bpe` is the only merge loop
+(the training audit reads its per-round pair totals; the encoder
+reads its checkpointed final vocab), and :func:`_doc_tokens` is the
+only word -> symbol-count join. ``bpe_encode_corpus``, the packing
+queries and the corpus funnel each call the encoder once, so each of
+them trains BPE exactly once.
 
 Cross-engine determinism: all counts are exact integers; the DuckDB
 oracle replays the merge rounds as unrolled CTEs, applying each merge
@@ -37,11 +42,12 @@ identically every round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdata_pipelines_aws_glue_spark import registry
+from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
@@ -77,35 +83,26 @@ def _adjacent_pairs(syms):
     )
 
 
-def _merge_fold_cols(syms, a, b):
+def _merge_fold(syms, a: str, b: str):
     """Greedy left-to-right merge of adjacent (a, b) -> ab, as a
-    JVM-side fold, with the pair as COLUMNS (r15: lets the training
-    loop read the argmax from a broadcast 1-row frame instead of a
-    driver collect). ``F.get`` (0-based) returns NULL out of bounds,
-    so the empty-accumulator case falls through under ANSI mode."""
-    merged = F.concat(a, b)
+    JVM-side fold. ``F.get`` (0-based) returns NULL out of bounds, so
+    the empty-accumulator case falls through under ANSI mode."""
     return F.aggregate(
         syms,
         F.array().cast("array<string>"),
         lambda acc, x: F.when(
-            (F.get(acc, F.size(acc) - 1) == a) & (x == b),
+            (F.get(acc, F.size(acc) - 1) == F.lit(a)) & (x == F.lit(b)),
             F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
+                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))
             ),
         ).otherwise(F.concat(acc, F.array(x))),
     )
 
 
-def _merge_fold(syms, a: str, b: str):
-    """:func:`_merge_fold_cols` with a literal pair (the audit
-    query's driver-loop form)."""
-    return _merge_fold_cols(syms, F.lit(a), F.lit(b))
-
-
 def _pair_counts(vocab: DataFrame) -> DataFrame:
     """Aggregated (a, b, cnt) adjacent-pair frequencies over the
-    vocab — the bounded pair table both training loops fetch once
-    per round (r16)."""
+    vocab — the bounded pair table the trainer fetches once per
+    round."""
     return (
         vocab.select(
             "freq", F.explode(_adjacent_pairs(F.col("syms"))).alias("p")
@@ -125,13 +122,19 @@ def _argmax_pair(pair_rows):
     )
 
 
-def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learn ``NUM_MERGES`` BPE merges from ``documents.text``.
+def _train_bpe(spark: SparkSession, sf_dir: str):
+    """The BPE trainer: learn ``NUM_MERGES`` merges from
+    ``documents.text``. Returns the checkpointed FINAL (word, freq,
+    syms) vocabulary and, per round, ``(a, b, cnt, pair_total)``: the
+    merged pair, its frequency at selection time, and the sum of all
+    pair counts over the vocab that round merged.
 
-    Returns one row per round: the merged pair, its (position-counted)
-    frequency at selection time, and the corpus-wide symbol count
-    after applying it — a strict audit trail of the training run.
-    """
+    One blocking job per round: the whole aggregated pair table is
+    fetched (bounded by distinct adjacent symbol pairs, the in-memory
+    state every BPE trainer keeps) and the argmax is taken on the
+    driver. The merge folds chain lazily over the checkpointed base
+    vocab; only the final vocab is checkpointed again, so every
+    consumer scans materialized rows."""
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
@@ -141,35 +144,41 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("word", "freq", _char_syms(F.col("word")).alias("syms"))
         .localCheckpoint(eager=True)
     )
-    # Optimization r16 (guide §2.4): ONE blocking job per round
-    # instead of three. Each round fetches the whole aggregated
-    # pair-count table (bounded by distinct adjacent symbol pairs —
-    # the in-memory state every BPE trainer keeps) and derives BOTH
-    # the argmax merge and the PREVIOUS round's ``corpus_syms_after``
-    # from it, via the exact integer identity
-    #     sum(freq * size(syms)) = sum(freq * n_pairs) + sum(freq)
-    # (size(syms) = n_pairs + 1 for every word). The merge folds
-    # chain LAZILY over the checkpointed base vocab — re-running k
-    # tiny array folds per round beats k eager-checkpoint jobs.
-    # Per-invocation blocking jobs drop 25 -> 11; same-session probe
-    # returned byte-identical rows for all three shapes tried.
-    total_freq = int(vocab.agg(F.sum("freq")).first()[0])
-    out_rows: list[list] = []
-    for rank in range(1, NUM_MERGES + 1):
+    rounds = []
+    for _ in range(NUM_MERGES):
         pair_rows = _pair_counts(vocab).collect()
-        if rank > 1:
-            # pair totals over the (k-1)-times-merged vocab give the
-            # previous round's post-merge corpus symbol count
-            out_rows[-1][4] = sum(r.cnt for r in pair_rows) + total_freq
         best = _argmax_pair(pair_rows)
+        rounds.append(
+            (best.a, best.b, int(best.cnt), sum(r.cnt for r in pair_rows))
+        )
         vocab = vocab.withColumn(
             "syms", _merge_fold(F.col("syms"), best.a, best.b)
         )
-        out_rows.append([rank, best.a, best.b, int(best.cnt), 0])
-    out_rows[-1][4] = int(
-        vocab.agg(F.sum(F.col("freq") * F.size(F.col("syms")))).first()[0]
-    )
-    out_rows = [tuple(r) for r in out_rows]
+    return vocab.localCheckpoint(eager=True), rounds
+
+
+def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Learn ``NUM_MERGES`` BPE merges from ``documents.text``.
+
+    Returns one row per round: the merged pair, its (position-counted)
+    frequency at selection time, and the corpus-wide symbol count
+    after applying it — a strict audit trail of the training run.
+
+    ``corpus_syms_after`` uses the exact integer identity
+    ``sum(freq * size(syms)) = sum(freq * n_pairs) + sum(freq)``
+    (``size(syms) = n_pairs + 1`` for every word): round k's count is
+    round k+1's pair total plus ``sum(freq)``. The last round has no
+    successor, so one aggregate over the final vocab gives both
+    ``sum(freq)`` and the final symbol count."""
+    vocab, rounds = _train_bpe(spark, sf_dir)
+    total_freq, final_syms = vocab.agg(
+        F.sum("freq"), F.sum(F.col("freq") * F.size(F.col("syms")))
+    ).first()
+    after = [r[3] + total_freq for r in rounds[1:]] + [final_syms]
+    out_rows = [
+        (rank, a, b, cnt, syms)
+        for rank, ((a, b, cnt, _), syms) in enumerate(zip(rounds, after), 1)
+    ]
     schema = T.StructType(
         [
             T.StructField("merge_rank", T.IntegerType()),
@@ -184,8 +193,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_ctes() -> list[str]:
     """Unrolled DuckDB replay of the merge rounds (see module doc),
-    as the shared CTE list behind BOTH oracles (training audit and
-    corpus encode)."""
+    as the shared CTE list behind every oracle that trains BPE."""
     ctes = [
         """v1 AS MATERIALIZED (
     SELECT word, CAST(count(*) AS BIGINT) AS freq,
@@ -262,104 +270,108 @@ _BPE_UNIONS = "\nUNION ALL\n".join(
 BPE_ORACLE = "WITH " + ",\n".join(_bpe_ctes()) + "\n" + _BPE_UNIONS
 
 
-def _train_final_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The training loop of :func:`bpe_train_merges` without the
-    per-round corpus-symbol audit collects — returns the FINAL
-    (word, freq, syms) vocabulary after ``NUM_MERGES`` merges."""
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
-        .filter(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select("word", "freq", _char_syms(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=True)
+
+def _doc_tokens(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> DataFrame:
+    """The encoder: per ``docs(doc_id, text)`` document, its word
+    count, the char-level symbol count its words start from (chars +
+    one ``</w>`` terminal each), its learned-BPE token count ``tok``
+    and its out-of-vocabulary word count ``n_oov``.
+
+    A broadcast LEFT join of the word stream against the final
+    (word -> n_syms) vocabulary — the 100 TB shape: the vocab is
+    bounded (1e6-1e7 rows at web scale) and the corpus never carries
+    symbol arrays. A word the vocab never saw decomposes to its
+    character symbols (``length(word) + 1``, its pre-merge cost) and
+    counts in ``n_oov``; on ``documents.text``, which the vocab is
+    trained on, that fallback never fires."""
+    vocab = _train_bpe(spark, sf_dir)[0].select(
+        "word", F.size("syms").alias("n_syms")
     )
-    # r15 measurement note: a broadcast-1-row-argmax variant (merge
-    # pair as columns via crossJoin, one blocking job per round) was
-    # tried and measured SLOWER (2.24 s vs 1.60 s at sf0.1) — the
-    # per-round broadcast exchange costs more than the extra tiny
-    # .first() job it saves. Kept the driver-collect form.
-    # r16 (guide §2.4): the per-round eager vocab checkpoint is gone —
-    # merge folds chain lazily over the checkpointed base, so each
-    # round is ONE blocking job (the pair-table fetch + Python argmax,
-    # replicating the orderBy tie-break byte-exactly) re-running at
-    # most NUM_MERGES tiny array folds over the materialized vocab
-    # rows. One final checkpoint keeps the multiply-scanned result
-    # cheap for consumers. Per-invocation blocking jobs 17 -> 10;
-    # warm-floor probe 1.57 -> 1.46-1.49 s at sf0.1 (the win is
-    # mostly the removed per-round barrier, which matters more as
-    # per-job overhead grows with cluster size).
-    for _ in range(NUM_MERGES):
-        best = _argmax_pair(_pair_counts(vocab).collect())
-        vocab = vocab.withColumn(
-            "syms", _merge_fold(F.col("syms"), best.a, best.b)
+    words = docs.select(
+        "doc_id", F.explode(_tokens(F.col("text"))).alias("word")
+    ).filter(F.length("word") > 0)
+    char_syms = F.length("word") + F.lit(1)
+    return (
+        words.join(maybe_broadcast(vocab), "word", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_words"),
+            F.sum(char_syms).cast("long").alias("n_char_syms"),
+            F.sum(F.coalesce(F.col("n_syms"), char_syms))
+            .cast("long")
+            .alias("tok"),
+            F.sum(F.col("n_syms").isNull().cast("long"))
+            .cast("long")
+            .alias("n_oov"),
         )
-    return vocab.localCheckpoint(eager=True)
+    )
+
+
+def _ppm(num: Column, den: Column) -> Column:
+    """``num / den`` in integer parts per million, rounded half up."""
+    return F.floor(num * F.lit(1000000.0) / den + F.lit(0.5)).cast("long")
+
+
+def _ppm_sql(num: str, den: str) -> str:
+    """The DuckDB twin of :func:`_ppm`."""
+    return f"CAST(floor({num} * 1000000.0 / {den} + 0.5) AS BIGINT)"
 
 
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Close the train->apply loop: ENCODE every document with the
     merges just learned from this corpus (``token_count_bpe`` applies
-    a FIXED tokenizer; this applies the trained one). Application is
-    a broadcast join of the doc word stream against the final
-    (word -> symbols) vocabulary — the 100 TB shape: the vocab is
-    bounded (1e6-1e7 rows at web scale), the corpus never carries
-    symbol arrays, and encoding adds zero extra shuffles beyond the
-    word explode's per-doc re-aggregation.
+    a FIXED tokenizer; this applies the trained one).
 
     Emits per document: word count, the char-level symbol count the
-    words started from (chars + one ``</w>`` terminal per word), the
-    BPE token count after the learned merges, and the compression in
-    exact integer ppm — all integers, hash-exact across engines."""
-    from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
-
-    vocab = _train_final_vocab(spark, sf_dir).select(
-        "word", F.size("syms").alias("n_syms"), F.length("word").alias("wlen")
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("word")
-    ).filter(F.length("word") > 0)
-    enc = words.join(maybe_broadcast(vocab), "word")
-    return enc.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_words"),
-        F.sum(F.col("wlen") + F.lit(1)).cast("long").alias("n_char_syms"),
-        F.sum("n_syms").cast("long").alias("n_bpe_tokens"),
-        F.floor(
-            F.sum("n_syms").cast("double")
-            * F.lit(1000000.0)
-            / F.sum(F.col("wlen") + F.lit(1)).cast("double")
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("compression_ppm"),
+    words started from, the BPE token count after the learned merges,
+    and the compression in exact integer ppm — all integers,
+    hash-exact across engines."""
+    toks = _doc_tokens(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+    return toks.select(
+        "doc_id",
+        "n_words",
+        "n_char_syms",
+        F.col("tok").alias("n_bpe_tokens"),
+        _ppm(
+            F.col("tok").cast("double"), F.col("n_char_syms").cast("double")
+        ).alias("compression_ppm"),
     )
 
 
-#: same unrolled CTE chain as BPE_ORACLE (the o{k} audit CTEs are
-#: simply unused); the final vocab v{NUM_MERGES+1} is joined back to
-#: the per-document word stream.
-BPE_ENCODE_ORACLE = (
-    "WITH "
-    + ",\n".join(_bpe_ctes())
-    + f"""
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(length(w.word) + 1) AS BIGINT) AS n_char_syms,
-       CAST(sum(len(v.syms)) AS BIGINT) AS n_bpe_tokens,
-       CAST(floor(sum(len(v.syms)) * 1000000.0
-                  / sum(length(w.word) + 1) + 0.5) AS BIGINT)
-           AS compression_ppm
-FROM (
-    SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-    FROM documents
-) w
-JOIN v{NUM_MERGES + 1} v ON w.word = v.word
-WHERE length(w.word) > 0
-GROUP BY doc_id
+def _encode_ctes(src: str) -> str:
+    """The DuckDB twin of :func:`_doc_tokens`: the BPE replay chain,
+    then ``dtok(doc_id, n_words, n_char_syms, tok, n_oov)`` over the
+    ``(doc_id, text)`` relation ``src`` joined to the final vocab
+    ``v{NUM_MERGES + 1}``."""
+    return (
+        ",\n".join(_bpe_ctes())
+        + f""",
+dtok AS MATERIALIZED (
+    SELECT w.doc_id,
+           CAST(count(*) AS BIGINT) AS n_words,
+           CAST(sum(length(w.word) + 1) AS BIGINT) AS n_char_syms,
+           CAST(sum(coalesce(len(v.syms), length(w.word) + 1))
+                AS BIGINT) AS tok,
+           CAST(sum(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_oov
+    FROM (
+        SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
+        FROM {src}
+    ) w
+    LEFT JOIN v{NUM_MERGES + 1} v ON w.word = v.word
+    WHERE length(w.word) > 0
+    GROUP BY w.doc_id
+)"""
+    )
+
+
+BPE_ENCODE_ORACLE = f"""WITH {_encode_ctes("documents")}
+SELECT doc_id, n_words, n_char_syms, tok AS n_bpe_tokens,
+       {_ppm_sql("tok", "n_char_syms")} AS compression_ppm
+FROM dtok
 """
-)
 
 
 def _register() -> None:

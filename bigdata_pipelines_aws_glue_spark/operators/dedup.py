@@ -6,11 +6,11 @@ designed Spark-first for 100 TB corpora:
 
 - exact dedup: hash-groupBy — one shuffle on the content hash, never
   on the full text (project to hash first).
-- near-dup: MinHash + banded LSH entirely in native expressions
-  (``xxhash64`` is a JVM function — no Python worker on the path).
-  Candidate generation is a self-join *within LSH buckets*, avoiding
-  the O(n²) cross join; exact-Jaccard verification runs only on
-  candidates.
+- near-dup: MinHash signatures from one Arrow-batched kernel
+  (:func:`minhash_signatures_pandas`), banded into LSH buckets by one
+  native band-key expression (:func:`_band_keys`). Candidate
+  generation is a self-join *within LSH buckets*, avoiding the O(n²)
+  cross join; exact-Jaccard verification runs only on candidates.
 - SimHash: 60-bit signatures from per-token md5-prefix hash bit
   votes (cross-engine reproducible, hash-checked oracle).
 
@@ -205,25 +205,6 @@ N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
 
-def minhash_signature(shingles: Column) -> Column:
-    """N2 (expression form): MinHash signature as an array of 16 mins
-    of seeded ``xxhash64`` values — no Python anywhere. JVM-only
-    fallback: NOT the cross-engine-reproducible family the registered
-    queries use (ANSI mode forbids the wrap-multiply the affine mix
-    needs in expressions; the Arrow kernel wraps natively in numpy).
-
-    NOTE: nested array HOFs are interpreted per-element (not
-    whole-stage-codegen'd); measured ~9ms/doc. Kept as the pure-JVM
-    fallback; the hot path is :func:`minhash_signatures_pandas`
-    (vectorized Arrow kernel, ~100x per-doc)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(N_HASHES - 1)),
-        lambda seed: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, seed))
-        ),
-    )
-
-
 #: Odd multipliers/offsets deriving the 16 hash family members from one
 #: base hash: h_i = (a_i * h + b_i) mod 2^64 mod 2^61-1 (Carter-Wegman
 #: style; the mod-2^64 step is numpy's native uint64 wrap, replicated
@@ -291,9 +272,40 @@ def minhash_signatures_pandas(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame, use_pandas_kernel: bool = True
-) -> DataFrame:
+def _band_keys(sig: Column) -> Column:
+    """The LSH band keys of a signature: one (band, bucket) struct per
+    band, ``bucket`` the 60-bit md5 prefix of the band's
+    comma-joined slice (replayed by ``_minhash_ctes``' ``band_key``)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat_ws(
+                            ",",
+                            F.transform(
+                                F.slice(
+                                    sig, b * ROWS_PER_BAND + 1, ROWS_PER_BAND
+                                ),
+                                lambda x: x.cast("string"),
+                            ),
+                        )
+                    ),
+                    1,
+                    15,
+                ),
+                16,
+                10,
+            )
+            .cast("long")
+            .alias("bucket"),
+        ),
+    )
+
+
+def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Banded-LSH candidate pairs: explode signatures into band keys,
     self-join per bucket. The join key is (band_idx, band_hash) — at
     100 TB this shuffles only (doc_id, 16×8B signature), and buckets
@@ -301,13 +313,7 @@ def minhash_lsh_candidates(
     minhashes."""
     from bigdata_pipelines_aws_glue_spark.operators.skew import spread
 
-    if use_pandas_kernel:
-        sig = minhash_signatures_pandas(spread(docs)).filter(F.size("sig") > 0)
-    else:
-        sig = spread(docs).select(
-            "doc_id",
-            minhash_signature(_shingles(_tokens(F.col("text")))).alias("sig"),
-        ).filter(F.size("sig") > 0)
+    sig = minhash_signatures_pandas(spread(docs)).filter(F.size("sig") > 0)
     # r15: the banded SELF-join below consumes the signature frame on
     # both sides, and Spark executed the whole signature pipeline
     # (scan -> spread exchange -> Arrow-batched Python kernel) TWICE —
@@ -318,37 +324,7 @@ def minhash_lsh_candidates(
     sig = sig.localCheckpoint(eager=True)
 
     bands = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    ",",
-                                    F.transform(
-                                        F.slice(
-                                            F.col("sig"),
-                                            b * ROWS_PER_BAND + 1,
-                                            ROWS_PER_BAND,
-                                        ),
-                                        lambda x: x.cast("string"),
-                                    ),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long").alias("bucket"),
-                ),
-            )
-        ).alias("bk"),
+        "doc_id", "sig", F.explode(_band_keys(F.col("sig"))).alias("bk")
     ).select("doc_id", "sig", "bk.band", "bk.bucket")
 
     a, b = bands.alias("a"), bands.alias("b")
@@ -532,35 +508,7 @@ def incremental_neardup_pairs(
         sig = minhash_signatures_pandas(docs).filter(F.size("sig") > 0)
         return sig.select(
             F.col("doc_id").alias(id_alias),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.conv(
-                            F.substring(
-                                F.md5(
-                                    F.concat_ws(
-                                        ",",
-                                        F.transform(
-                                            F.slice(
-                                                F.col("sig"),
-                                                b * ROWS_PER_BAND + 1,
-                                                ROWS_PER_BAND,
-                                            ),
-                                            lambda x: x.cast("string"),
-                                        ),
-                                    )
-                                ),
-                                1,
-                                15,
-                            ),
-                            16,
-                            10,
-                        ).cast("long").alias("bucket"),
-                    ),
-                )
-            ).alias("bk"),
+            F.explode(_band_keys(F.col("sig"))).alias("bk"),
         ).select(id_alias, "bk.band", "bk.bucket")
 
     cand = (

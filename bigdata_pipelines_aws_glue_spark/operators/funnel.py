@@ -57,13 +57,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
-from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 from bigdata_pipelines_aws_glue_spark.operators.bpe import (
-    NUM_MERGES,
-    _bpe_ctes,
-    _train_final_vocab,
+    _doc_tokens,
+    _encode_ctes,
 )
-from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
 from bigdata_pipelines_aws_glue_spark.operators.markup import (
     _ANCHOR_TEXT_RE,
     _strip_sql,
@@ -71,10 +68,12 @@ from bigdata_pipelines_aws_glue_spark.operators.markup import (
     strip_markup,
 )
 from bigdata_pipelines_aws_glue_spark.operators.packing import (
-    DOCS_PER_SHARD,
-    SEQ_BUDGET,
-    _pack_fold,
-    _pack_step,
+    _chain,
+    _fills,
+    _fills_cte,
+    _manifest,
+    _manifest_sql,
+    _packed,
 )
 from bigdata_pipelines_aws_glue_spark.operators.text import (
     GOPHER_MAX_BULLET_RATIO,
@@ -204,48 +203,13 @@ def _host_cap(deduped: DataFrame) -> DataFrame:
     )
 
 
-def _survivor_tokens(
-    spark: SparkSession, sf_dir: str, curated: DataFrame
-) -> DataFrame:
-    """(doc_id, tok, n_oov): learned-BPE token counts of the
-    quality-surviving docs' CONTENT, with the loud character fallback
-    for OOV words (module doc)."""
-    vocab = _train_final_vocab(spark, sf_dir).select(
-        "word", F.size("syms").alias("n_syms")
-    )
-    kept = curated.filter(gopher_keep(F.col("content")))
-    words = kept.select(
-        "doc_id", F.explode(_tokens(F.col("content"))).alias("word")
-    ).filter(F.length("word") > 0)
-    enc = words.join(maybe_broadcast(vocab), "word", "left")
-    return enc.groupBy("doc_id").agg(
-        F.sum(
-            F.coalesce(F.col("n_syms"), F.length("word") + F.lit(1))
-        )
-        .cast("long")
-        .alias("tok"),
-        F.sum(F.col("n_syms").isNull().cast("long"))
-        .cast("long")
-        .alias("n_oov"),
-    )
-
-
-def _funnel_packed(toks: DataFrame) -> DataFrame:
-    """Next-fit packing of the survivors (``packing._pack_fold``
-    verbatim; survivor shards are sparse — gaps where dedup/quality
-    dropped docs — but never exceed DOCS_PER_SHARD entries)."""
-    shards = (
-        toks.select(
-            F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
-            .cast("long")
-            .alias("shard"),
-            F.struct(F.col("doc_id"), F.col("tok")).alias("s"),
-        )
-        .groupBy("shard")
-        .agg(F.array_sort(F.collect_list("s")).alias("lst"))
-    )
-    return shards.select(
-        "shard", F.explode(_pack_fold(F.col("lst"))).alias("q")
+def _quality_kept(curated: DataFrame) -> DataFrame:
+    """(doc_id, text): the Gopher-surviving docs' CONTENT, in the
+    shape the BPE encoder (``bpe._doc_tokens``) reads; its
+    out-of-vocabulary character fallback is the loud OOV seam of the
+    module doc."""
+    return curated.filter(gopher_keep(F.col("content"))).select(
+        "doc_id", F.col("content").alias("text")
     )
 
 
@@ -258,21 +222,8 @@ def corpus_funnel_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     through inflate -> parse -> extract -> URL-curate -> quality ->
     encode. One linear plan, no branching."""
     curated = _host_cap(_dedup_urls(_base_frame(spark, sf_dir)))
-    toks = _survivor_tokens(spark, sf_dir, curated)
-    return _funnel_packed(toks).select(
-        "shard",
-        F.col("q.seq_idx").alias("seq_idx"),
-        F.col("q.n_docs").alias("n_docs"),
-        F.col("q.n_tokens").alias("n_tokens"),
-        F.col("q.n_trunc").alias("n_trunc_tokens"),
-        F.floor(
-            F.col("q.n_tokens") * F.lit(1000000.0) / F.lit(SEQ_BUDGET)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("fill_ppm"),
-        F.col("q.first_doc").alias("first_doc_id"),
-        F.col("q.last_doc").alias("last_doc_id"),
+    return _manifest(
+        _packed(_doc_tokens(spark, sf_dir, _quality_kept(curated)))
     )
 
 
@@ -285,9 +236,9 @@ def corpus_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _base_frame(spark, sf_dir).localCheckpoint(eager=True)
     deduped = _dedup_urls(base).localCheckpoint(eager=True)
     curated = _host_cap(deduped)
-    toks = _survivor_tokens(spark, sf_dir, curated).localCheckpoint(
-        eager=True
-    )
+    toks = _doc_tokens(
+        spark, sf_dir, _quality_kept(curated)
+    ).localCheckpoint(eager=True)
     a = base.agg(F.count(F.lit(1)).cast("long").alias("n_records"))
     b = deduped.agg(
         F.count(F.lit(1)).cast("long").alias("n_unique_urls")
@@ -300,10 +251,8 @@ def corpus_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_oov").cast("long").alias("n_oov_words"),
         F.sum("tok").cast("long").alias("n_input_tokens"),
     )
-    e = _funnel_packed(toks).agg(
-        F.count(F.lit(1)).cast("long").alias("n_sequences"),
-        F.sum("q.n_tokens").cast("long").alias("n_packed_tokens"),
-        F.sum("q.n_trunc").cast("long").alias("n_truncated_tokens"),
+    e = _fills(_packed(toks)).select(
+        "n_sequences", "n_packed_tokens", "n_truncated_tokens"
     )
     # chained 1-row scalar crossJoins (the packing_stats shape).
     return a.crossJoin(b).crossJoin(c).crossJoin(d).crossJoin(e)
@@ -392,67 +341,24 @@ hc AS MATERIALIZED (
     ) WHERE host_rank <= {MAX_PER_HOST}
 ),
 gq AS MATERIALIZED (
-    SELECT doc_id, content FROM hc
+    SELECT doc_id, content AS text FROM hc
     WHERE {_gopher_keep_sql('content')}
 ),
 """
-    + ",\n".join(_bpe_ctes())
-    + f""",
-fdt AS MATERIALIZED (
-    SELECT w.doc_id,
-           CAST(sum(coalesce(len(v.syms), length(w.word) + 1))
-                AS BIGINT) AS tok,
-           CAST(sum(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_oov
-    FROM (
-        SELECT doc_id, unnest(string_split(trim(content), ' ')) AS word
-        FROM gq
-    ) w
-    LEFT JOIN v{NUM_MERGES + 1} v ON w.word = v.word
-    WHERE length(w.word) > 0
-    GROUP BY w.doc_id
-),
-fsh AS MATERIALIZED (
-    SELECT CAST(doc_id // {DOCS_PER_SHARD} AS BIGINT) AS shard,
-           list(struct_pack(doc_id := doc_id, tok := tok)
-                ORDER BY doc_id) AS lst
-    FROM fdt
-    GROUP BY 1
-),
-k0 AS MATERIALIZED (
-    SELECT shard, lst,
-           CAST([] AS STRUCT(seq_idx INT, n_docs INT, n_tokens INT,
-                             n_trunc INT, first_doc BIGINT,
-                             last_doc BIGINT)[]) AS seqs
-    FROM fsh
-),
-"""
-    + ",\n".join(_pack_step(i) for i in range(1, DOCS_PER_SHARD + 1))
+    + _encode_ctes("gq")
+    + ",\n"
+    + _chain("k")
 )
 
 
-FUNNEL_MANIFEST_ORACLE = (
-    _FUNNEL_CTES
-    + f""",
-seq AS (SELECT shard, unnest(seqs) AS q FROM k{DOCS_PER_SHARD})
-SELECT shard,
-       struct_extract(q, 'seq_idx') AS seq_idx,
-       struct_extract(q, 'n_docs') AS n_docs,
-       struct_extract(q, 'n_tokens') AS n_tokens,
-       struct_extract(q, 'n_trunc') AS n_trunc_tokens,
-       CAST(floor(struct_extract(q, 'n_tokens') * 1000000.0
-                  / {SEQ_BUDGET} + 0.5) AS BIGINT) AS fill_ppm,
-       struct_extract(q, 'first_doc') AS first_doc_id,
-       struct_extract(q, 'last_doc') AS last_doc_id
-FROM seq
-"""
-)
+FUNNEL_MANIFEST_ORACLE = _FUNNEL_CTES + "\n" + _manifest_sql("k")
 
 
 FUNNEL_STATS_ORACLE = (
     _FUNNEL_CTES
-    + f""",
-seq AS (SELECT unnest(seqs) AS q FROM k{DOCS_PER_SHARD}),
+    + ",\n"
+    + _fills_cte("pa", "k")
+    + """,
 sa AS (SELECT CAST(count(*) AS BIGINT) AS n_records FROM cdoc),
 ua AS (SELECT CAST(count(*) AS BIGINT) AS n_unique_urls FROM dd),
 ha AS (SELECT CAST(count(*) AS BIGINT) AS n_after_host_cap FROM hc),
@@ -460,15 +366,7 @@ qa AS (
     SELECT CAST(count(*) AS BIGINT) AS n_quality_kept,
            CAST(sum(n_oov) AS BIGINT) AS n_oov_words,
            CAST(sum(tok) AS BIGINT) AS n_input_tokens
-    FROM fdt
-),
-pa AS (
-    SELECT CAST(count(*) AS BIGINT) AS n_sequences,
-           CAST(sum(struct_extract(q, 'n_tokens')) AS BIGINT)
-               AS n_packed_tokens,
-           CAST(sum(struct_extract(q, 'n_trunc')) AS BIGINT)
-               AS n_truncated_tokens
-    FROM seq
+    FROM dtok
 )
 SELECT sa.n_records, ua.n_unique_urls, ha.n_after_host_cap,
        qa.n_quality_kept, qa.n_oov_words, qa.n_input_tokens,

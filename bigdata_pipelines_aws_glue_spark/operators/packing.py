@@ -4,8 +4,7 @@ no documents). The step between ``bpe_encode_corpus``
 (``operators/bpe.py``) and a training batch: bin the per-document
 token streams into fixed token-budget context windows.
 
-Semantics — TWO deterministic oracle-checkable forms, both visiting
-documents in ``doc_id`` order:
+Semantics — THREE deterministic oracle-checkable forms:
 
 * ``pack_training_sequences`` — greedy NEXT-FIT: each doc goes into
   the CURRENT (open) sequence if its token count still fits the
@@ -27,7 +26,7 @@ documents in ``doc_id`` order:
   three on this corpus in one audit row (FFD ≤ FF ≤ NF sequence
   counts, identical token totals).
 
-In both forms a document longer
+In every form a document longer
 than the budget is TRUNCATED to the budget (it fills its own
 sequence exactly; the clipped tokens are accounted, never silently
 dropped). Documents are never split across sequences — the
@@ -51,13 +50,17 @@ boundaries, so the result is deterministic AND embarrassingly
 parallel; the shard list is bounded (<= DOCS_PER_SHARD structs) by
 doc_id arithmetic, not by trust.
 
-Token counts are the LEARNED-BPE stream: ``_train_final_vocab``'s
-merges applied via the bounded vocab broadcast join (the
-``bpe_encode_corpus`` shape). The DuckDB oracle replays BPE training
-through the shared ``_bpe_ctes()`` chain, then unrolls the greedy
-fold ``DOCS_PER_SHARD`` times as chained CTEs (the established
-unrolled-replay pattern) — the hash match proves tokenization AND
-the packing recurrence are engine-exact.
+Token counts are the LEARNED-BPE stream: ``bpe._doc_tokens`` (the one
+encoder, a bounded vocab broadcast join) run once per query, its
+``(doc_id, tok)`` table handed to every packer the query needs, so
+each query trains BPE once. One packer, :func:`_packed`, shards and
+folds that table for all three forms; :func:`_manifest` and
+:func:`_fills` are the one manifest projection and the one fill
+aggregate. The DuckDB oracle replays BPE training and encoding
+through the shared ``bpe._encode_ctes`` chain, then unrolls each
+greedy fold ``DOCS_PER_SHARD`` times as chained CTEs (the established
+unrolled-replay pattern, :func:`_chain`) — the hash match proves
+tokenization AND the packing recurrence are engine-exact.
 
 Conservation (pinned by pytest, visible in ``packing_stats``):
 ``n_packed_tokens + n_truncated_tokens == n_input_tokens`` — the
@@ -71,13 +74,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
-from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 from bigdata_pipelines_aws_glue_spark.operators.bpe import (
-    NUM_MERGES,
-    _bpe_ctes,
-    _train_final_vocab,
+    _doc_tokens,
+    _encode_ctes,
+    _ppm,
+    _ppm_sql,
 )
-from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 #: fixed context-window token budget. 512 against this corpus's
@@ -95,24 +97,6 @@ _SEQ_TYPE = (
     "array<struct<seq_idx:int,n_docs:int,n_tokens:int,"
     "n_trunc:int,first_doc:bigint,last_doc:bigint>>"
 )
-
-
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, tok): learned-BPE token count per document — the
-    ``bpe_encode_corpus`` apply step reduced to the one column
-    packing needs."""
-    vocab = _train_final_vocab(spark, sf_dir).select(
-        "word", F.size("syms").alias("n_syms")
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("word")
-    ).filter(F.length("word") > 0)
-    return (
-        words.join(maybe_broadcast(vocab), "word")
-        .groupBy("doc_id")
-        .agg(F.sum("n_syms").cast("long").alias("tok"))
-    )
 
 
 def _pack_fold(lst: Column) -> Column:
@@ -155,79 +139,6 @@ def _pack_fold(lst: Column) -> Column:
         return F.when(fits, grown).otherwise(fresh)
 
     return F.aggregate(lst, F.array().cast(_SEQ_TYPE), step)
-
-
-def _packed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(shard, q) exploded sequence structs."""
-    toks = _doc_tokens(spark, sf_dir)
-    shards = (
-        toks.select(
-            F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
-            .cast("long")
-            .alias("shard"),
-            F.struct(F.col("doc_id"), F.col("tok")).alias("s"),
-        )
-        .groupBy("shard")
-        .agg(F.array_sort(F.collect_list("s")).alias("lst"))
-    )
-    return shards.select(
-        "shard", F.explode(_pack_fold(F.col("lst"))).alias("q")
-    )
-
-
-def pack_training_sequences(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One row per packed context window: shard, within-shard
-    sequence index, how many docs it holds, packed token count,
-    clipped-token count, integer-ppm fill rate, and the doc_id span
-    — the manifest a downstream batch loader consumes."""
-    return _packed(spark, sf_dir).select(
-        "shard",
-        F.col("q.seq_idx").alias("seq_idx"),
-        F.col("q.n_docs").alias("n_docs"),
-        F.col("q.n_tokens").alias("n_tokens"),
-        F.col("q.n_trunc").alias("n_trunc_tokens"),
-        F.floor(
-            F.col("q.n_tokens") * F.lit(1000000.0) / F.lit(SEQ_BUDGET)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("fill_ppm"),
-        F.col("q.first_doc").alias("first_doc_id"),
-        F.col("q.last_doc").alias("last_doc_id"),
-    )
-
-
-def packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row corpus audit. ``n_input_tokens`` comes from the token
-    table DIRECTLY (not from the sequences), so conservation
-    (``n_packed_tokens + n_truncated_tokens == n_input_tokens``) is
-    checkable from the emitted row alone."""
-    toks = _doc_tokens(spark, sf_dir)
-    seqs = _packed(spark, sf_dir)
-    a = toks.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("tok").cast("long").alias("n_input_tokens"),
-    )
-    b = seqs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_sequences"),
-        F.sum("q.n_tokens").cast("long").alias("n_packed_tokens"),
-        F.sum("q.n_trunc").cast("long").alias("n_truncated_tokens"),
-        F.sum(
-            (F.col("q.n_tokens") == F.lit(SEQ_BUDGET)).cast("long")
-        ).alias("n_exact_full"),
-        F.floor(
-            F.sum("q.n_tokens") * F.lit(1000000.0)
-            / (F.count(F.lit(1)) * F.lit(SEQ_BUDGET))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("avg_fill_ppm"),
-    )
-    # two 1-row aggregates: the same bounded crossJoin shape as
-    # warc_roundtrip_audit (metadata-sized by construction).
-    return a.crossJoin(b)
 
 
 def _firstfit_fold(lst: Column) -> Column:
@@ -286,21 +197,87 @@ def _firstfit_fold(lst: Column) -> Column:
     return F.aggregate(lst, F.array().cast(_SEQ_TYPE), step)
 
 
-def _packed_ff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _doc_tokens(spark, sf_dir)
+def _packed(
+    toks: DataFrame, fold=_pack_fold, decreasing: bool = False
+) -> DataFrame:
+    """The packer: (shard, q) exploded sequence structs of a
+    ``(doc_id, tok)`` table. Each shard's docs are visited in doc_id
+    order, or with ``decreasing`` by tok DESC, doc_id ASC (FFD: the
+    sort key ``negtok`` rides first in the collected struct, so the
+    plain lexicographic ``array_sort`` realizes it; the folds read
+    only ``doc_id`` and ``tok``). Shards may be sparse (the funnel's
+    survivors leave gaps) but never exceed DOCS_PER_SHARD entries."""
+    key = [(-F.col("tok")).alias("negtok")] if decreasing else []
     shards = (
         toks.select(
             F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
             .cast("long")
             .alias("shard"),
-            F.struct(F.col("doc_id"), F.col("tok")).alias("s"),
+            F.struct(*key, F.col("doc_id"), F.col("tok")).alias("s"),
         )
         .groupBy("shard")
         .agg(F.array_sort(F.collect_list("s")).alias("lst"))
     )
-    return shards.select(
-        "shard", F.explode(_firstfit_fold(F.col("lst"))).alias("q")
+    return shards.select("shard", F.explode(fold(F.col("lst"))).alias("q"))
+
+
+def _manifest(packed: DataFrame) -> DataFrame:
+    """One row per packed context window: shard, within-shard
+    sequence index, how many docs it holds, packed token count,
+    clipped-token count, integer-ppm fill rate, and the first/last
+    doc assigned."""
+    return packed.select(
+        "shard",
+        F.col("q.seq_idx").alias("seq_idx"),
+        F.col("q.n_docs").alias("n_docs"),
+        F.col("q.n_tokens").alias("n_tokens"),
+        F.col("q.n_trunc").alias("n_trunc_tokens"),
+        _ppm(F.col("q.n_tokens"), F.lit(SEQ_BUDGET)).alias("fill_ppm"),
+        F.col("q.first_doc").alias("first_doc_id"),
+        F.col("q.last_doc").alias("last_doc_id"),
     )
+
+
+def _fills(packed: DataFrame) -> DataFrame:
+    """One-row fill aggregate of a packing: sequence count, packed
+    and clipped token totals, exactly-full sequences, and the average
+    fill in integer ppm."""
+    n_seq = F.count(F.lit(1))
+    return packed.agg(
+        n_seq.cast("long").alias("n_sequences"),
+        F.sum("q.n_tokens").cast("long").alias("n_packed_tokens"),
+        F.sum("q.n_trunc").cast("long").alias("n_truncated_tokens"),
+        F.sum(
+            (F.col("q.n_tokens") == F.lit(SEQ_BUDGET)).cast("long")
+        ).alias("n_exact_full"),
+        _ppm(F.sum("q.n_tokens"), n_seq * F.lit(SEQ_BUDGET)).alias(
+            "avg_fill_ppm"
+        ),
+    )
+
+
+def pack_training_sequences(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The next-fit manifest a downstream batch loader consumes
+    (sequence doc spans are contiguous doc_id ranges)."""
+    toks = _doc_tokens(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+    return _manifest(_packed(toks))
+
+
+def packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-row corpus audit. ``n_input_tokens`` comes from the token
+    table DIRECTLY (not from the sequences), so conservation
+    (``n_packed_tokens + n_truncated_tokens == n_input_tokens``) is
+    checkable from the emitted row alone."""
+    toks = _doc_tokens(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+    a = toks.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("tok").cast("long").alias("n_input_tokens"),
+    )
+    # two 1-row aggregates: the same bounded crossJoin shape as
+    # warc_roundtrip_audit (metadata-sized by construction).
+    return a.crossJoin(_fills(_packed(toks)))
 
 
 def pack_sequences_firstfit(
@@ -311,56 +288,8 @@ def pack_sequences_firstfit(
     doc ASSIGNED (first-fit doc spans interleave across sequences,
     so [first_doc_id, last_doc_id] is an assignment span, not a
     contiguous range)."""
-    return _packed_ff(spark, sf_dir).select(
-        "shard",
-        F.col("q.seq_idx").alias("seq_idx"),
-        F.col("q.n_docs").alias("n_docs"),
-        F.col("q.n_tokens").alias("n_tokens"),
-        F.col("q.n_trunc").alias("n_trunc_tokens"),
-        F.floor(
-            F.col("q.n_tokens") * F.lit(1000000.0) / F.lit(SEQ_BUDGET)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("fill_ppm"),
-        F.col("q.first_doc").alias("first_doc_id"),
-        F.col("q.last_doc").alias("last_doc_id"),
-    )
-
-
-def _packed_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-fit over the shard's docs sorted by tok DESC, doc_id ASC
-    — the decreasing visit order is the only difference from
-    ``_packed_ff``. The sort key rides inside the collected struct
-    (``negtok`` first, so the plain lexicographic ``array_sort``
-    realizes (tok desc, doc_id asc)); the fold itself is unchanged."""
-    toks = _doc_tokens(spark, sf_dir)
-    shards = (
-        toks.select(
-            F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
-            .cast("long")
-            .alias("shard"),
-            F.struct(
-                (-F.col("tok")).alias("negtok"),
-                F.col("doc_id"),
-                F.col("tok"),
-            ).alias("s"),
-        )
-        .groupBy("shard")
-        .agg(F.array_sort(F.collect_list("s")).alias("lst0"))
-        .select(
-            "shard",
-            F.transform(
-                F.col("lst0"),
-                lambda s: F.struct(
-                    s["doc_id"].alias("doc_id"), s["tok"].alias("tok")
-                ),
-            ).alias("lst"),
-        )
-    )
-    return shards.select(
-        "shard", F.explode(_firstfit_fold(F.col("lst"))).alias("q")
-    )
+    toks = _doc_tokens(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+    return _manifest(_packed(toks, _firstfit_fold))
 
 
 def pack_sequences_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,21 +297,8 @@ def pack_sequences_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pack_sequences_firstfit``; ``first_doc_id``/``last_doc_id`` are
     the first/last docs ASSIGNED in the decreasing visit order (an
     assignment span, not a doc_id range)."""
-    return _packed_ffd(spark, sf_dir).select(
-        "shard",
-        F.col("q.seq_idx").alias("seq_idx"),
-        F.col("q.n_docs").alias("n_docs"),
-        F.col("q.n_tokens").alias("n_tokens"),
-        F.col("q.n_trunc").alias("n_trunc_tokens"),
-        F.floor(
-            F.col("q.n_tokens") * F.lit(1000000.0) / F.lit(SEQ_BUDGET)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("fill_ppm"),
-        F.col("q.first_doc").alias("first_doc_id"),
-        F.col("q.last_doc").alias("last_doc_id"),
-    )
+    toks = _doc_tokens(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+    return _manifest(_packed(toks, _firstfit_fold, decreasing=True))
 
 
 def packing_fill_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,83 +308,54 @@ def packing_fill_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     that justify carrying open-bin state / a shard pre-sort). Token
     totals are conserved identically by construction (same truncation
     rule), so one token column + one conservation bit are emitted."""
-
-    def fills(df: DataFrame, tag: str) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias(f"{tag}_sequences"),
-            F.floor(
-                F.sum("q.n_tokens") * F.lit(1000000.0)
-                / (F.count(F.lit(1)) * F.lit(SEQ_BUDGET))
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias(f"{tag}_avg_fill_ppm"),
-            F.sum("q.n_tokens").cast("long").alias(f"{tag}_packed_tokens"),
-        )
-
-    nf = fills(_packed(spark, sf_dir), "nf")
-    ff = fills(_packed_ff(spark, sf_dir), "ff")
-    ffd = fills(_packed_ffd(spark, sf_dir), "ffd")
+    toks = _doc_tokens(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+    nf = _fills(_packed(toks)).alias("nf")
+    ff = _fills(_packed(toks, _firstfit_fold)).alias("ff")
+    ffd = _fills(_packed(toks, _firstfit_fold, decreasing=True)).alias("ffd")
+    seqs = {t: F.col(f"{t}.n_sequences") for t in ("nf", "ff", "ffd")}
+    packed = {t: F.col(f"{t}.n_packed_tokens") for t in ("nf", "ff", "ffd")}
     # chained 1-row x 1-row scalar crossJoins (the packing_stats
     # shape — metadata-sized by construction).
     return nf.crossJoin(ff).crossJoin(ffd).select(
-        "nf_sequences",
-        "ff_sequences",
-        "ffd_sequences",
-        (F.col("nf_sequences") - F.col("ff_sequences"))
-        .cast("long")
-        .alias("ff_saved"),
-        (F.col("nf_sequences") - F.col("ffd_sequences"))
-        .cast("long")
-        .alias("ffd_saved"),
-        "nf_avg_fill_ppm",
-        "ff_avg_fill_ppm",
-        "ffd_avg_fill_ppm",
-        F.col("nf_packed_tokens").alias("n_packed_tokens"),
+        *(seqs[t].alias(f"{t}_sequences") for t in ("nf", "ff", "ffd")),
+        (seqs["nf"] - seqs["ff"]).cast("long").alias("ff_saved"),
+        (seqs["nf"] - seqs["ffd"]).cast("long").alias("ffd_saved"),
+        *(
+            F.col(f"{t}.avg_fill_ppm").alias(f"{t}_avg_fill_ppm")
+            for t in ("nf", "ff", "ffd")
+        ),
+        packed["nf"].alias("n_packed_tokens"),
         (
-            (F.col("ff_packed_tokens") == F.col("nf_packed_tokens"))
-            & (F.col("ffd_packed_tokens") == F.col("nf_packed_tokens"))
+            (packed["ff"] == packed["nf"]) & (packed["ffd"] == packed["nf"])
         ).alias("tokens_conserved"),
     )
 
 
 # ------------------------------------------------ DuckDB twins
 
-#: per-doc learned-BPE token counts off the shared BPE replay chain
-#: (v{NUM_MERGES+1} is the final vocab, exactly as BPE_ENCODE_ORACLE
-#: consumes it).
-_DTOK_CTE = f"""dtok AS MATERIALIZED (
-    SELECT doc_id, CAST(sum(len(v.syms)) AS BIGINT) AS tok
-    FROM (
-        SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-        FROM documents
-    ) w
-    JOIN v{NUM_MERGES + 1} v ON w.word = v.word
-    WHERE length(w.word) > 0
-    GROUP BY doc_id
-),
-sh AS MATERIALIZED (
+
+def _chain_start(m: str, order_by: str) -> str:
+    """``{m}0``: per shard, the ``dtok`` (doc_id, tok) structs in visit
+    order and the empty ``seqs`` accumulator — the first CTE of every
+    unrolled packing chain."""
+    return f"""{m}0 AS MATERIALIZED (
     SELECT CAST(doc_id // {DOCS_PER_SHARD} AS BIGINT) AS shard,
            list(struct_pack(doc_id := doc_id, tok := tok)
-                ORDER BY doc_id) AS lst
-    FROM dtok
-    GROUP BY 1
-),
-k0 AS MATERIALIZED (
-    SELECT shard, lst,
+                ORDER BY {order_by}) AS lst,
            CAST([] AS STRUCT(seq_idx INT, n_docs INT, n_tokens INT,
                              n_trunc INT, first_doc BIGINT,
                              last_doc BIGINT)[]) AS seqs
-    FROM sh
+    FROM dtok
+    GROUP BY 1
 )"""
 
 
-def _pack_step(i: int) -> str:
-    """One unrolled greedy-fit step: the DuckDB twin of the fold
-    body (two CTEs: extract element ``i``, then update the seqs)."""
+def _elem_cte(i: int, m: str) -> str:
+    """``{m}_x{i}``: the chain state ``{m}{i-1}`` plus element ``i``
+    of each shard list (``did``, the clipped ``ctok`` and the clipped
+    remainder ``tr``; NULL past the list's end)."""
     b = SEQ_BUDGET
-    last = "seqs[-1]"
-    return f"""t{i} AS MATERIALIZED (
+    return f"""{m}_x{i} AS MATERIALIZED (
     SELECT shard, lst, seqs,
         CASE WHEN len(lst) >= {i}
              THEN struct_extract(lst[{i}], 'doc_id') END AS did,
@@ -479,9 +366,19 @@ def _pack_step(i: int) -> str:
              THEN CAST(struct_extract(lst[{i}], 'tok')
                        - least(struct_extract(lst[{i}], 'tok'), {b})
                        AS INT) END AS tr
-    FROM k{i - 1}
-),
-k{i} AS MATERIALIZED (
+    FROM {m}{i - 1}
+)"""
+
+
+def _pack_step(i: int, m: str) -> str:
+    """One unrolled next-fit step: the DuckDB twin of
+    :func:`_pack_fold`'s body."""
+    b = SEQ_BUDGET
+    last = "seqs[-1]"
+    return (
+        _elem_cte(i, m)
+        + f""",
+{m}{i} AS MATERIALIZED (
     SELECT shard, lst,
         CASE
         WHEN did IS NULL THEN seqs
@@ -504,122 +401,26 @@ k{i} AS MATERIALIZED (
              first_doc := CAST(did AS BIGINT),
              last_doc := CAST(did AS BIGINT)))
         END AS seqs
-    FROM t{i}
+    FROM {m}_x{i}
 )"""
+    )
 
 
-_PACK_CTES = (
-    "WITH "
-    + ",\n".join(_bpe_ctes())
-    + ",\n"
-    + _DTOK_CTE
-    + ",\n"
-    + ",\n".join(_pack_step(i) for i in range(1, DOCS_PER_SHARD + 1))
-)
-
-
-PACK_SEQUENCES_ORACLE = (
-    _PACK_CTES
-    + f""",
-seq AS (SELECT shard, unnest(seqs) AS q FROM k{DOCS_PER_SHARD})
-SELECT shard,
-       struct_extract(q, 'seq_idx') AS seq_idx,
-       struct_extract(q, 'n_docs') AS n_docs,
-       struct_extract(q, 'n_tokens') AS n_tokens,
-       struct_extract(q, 'n_trunc') AS n_trunc_tokens,
-       CAST(floor(struct_extract(q, 'n_tokens') * 1000000.0
-                  / {SEQ_BUDGET} + 0.5) AS BIGINT) AS fill_ppm,
-       struct_extract(q, 'first_doc') AS first_doc_id,
-       struct_extract(q, 'last_doc') AS last_doc_id
-FROM seq
-"""
-)
-
-
-PACKING_STATS_ORACLE = (
-    _PACK_CTES
-    + f""",
-seq AS (SELECT shard, unnest(seqs) AS q FROM k{DOCS_PER_SHARD}),
-ia AS (
-    SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(tok) AS BIGINT) AS n_input_tokens
-    FROM dtok
-),
-sa AS (
-    SELECT CAST(count(*) AS BIGINT) AS n_sequences,
-           CAST(sum(struct_extract(q, 'n_tokens')) AS BIGINT)
-               AS n_packed_tokens,
-           CAST(sum(struct_extract(q, 'n_trunc')) AS BIGINT)
-               AS n_truncated_tokens,
-           CAST(sum(CASE WHEN struct_extract(q, 'n_tokens')
-                              = {SEQ_BUDGET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_exact_full,
-           CAST(floor(sum(struct_extract(q, 'n_tokens')) * 1000000.0
-                      / (count(*) * {SEQ_BUDGET}) + 0.5) AS BIGINT)
-               AS avg_fill_ppm
-    FROM seq
-)
-SELECT ia.n_docs, ia.n_input_tokens, sa.n_sequences,
-       sa.n_packed_tokens, sa.n_truncated_tokens, sa.n_exact_full,
-       sa.avg_fill_ppm
-FROM ia, sa
-"""
-)
-
-
-def _ff_start(m: str, src: str) -> str:
-    """First-fit chain start: empty accumulator named ``{m}0`` off the
-    given shard-list CTE (``sh`` for doc_id order, ``shd`` for the
-    decreasing order)."""
-    return f"""{m}0 AS MATERIALIZED (
-    SELECT shard, lst,
-           CAST([] AS STRUCT(seq_idx INT, n_docs INT, n_tokens INT,
-                             n_trunc INT, first_doc BIGINT,
-                             last_doc BIGINT)[]) AS seqs
-    FROM {src}
-)"""
-
-
-#: first-fit chain start: same empty accumulator off the shared sh.
-_FF_START = _ff_start("m", "sh")
-
-#: the decreasing-order shard lists (FFD's only difference): same
-#: (doc_id, tok) structs, visit order tok DESC, doc_id ASC.
-_SHD_CTE = f"""shd AS MATERIALIZED (
-    SELECT CAST(doc_id // {DOCS_PER_SHARD} AS BIGINT) AS shard,
-           list(struct_pack(doc_id := doc_id, tok := tok)
-                ORDER BY tok DESC, doc_id) AS lst
-    FROM dtok
-    GROUP BY 1
-)"""
-
-
-def _ff_step(i: int, m: str = "m", g: str = "g", h: str = "h") -> str:
-    """One unrolled FIRST-FIT step (three CTEs: extract element,
-    find the first open sequence with room, update it in place).
-    CTE-name prefixes are parameterized so the FFD chain can unroll
-    the identical step alongside the FF chain in one oracle."""
+def _ff_step(i: int, m: str) -> str:
+    """One unrolled FIRST-FIT step: the DuckDB twin of
+    :func:`_firstfit_fold`'s body (extract element, find the first
+    open sequence with room, update it in place)."""
     b = SEQ_BUDGET
-    return f"""{g}{i} AS MATERIALIZED (
-    SELECT shard, lst, seqs,
-        CASE WHEN len(lst) >= {i}
-             THEN struct_extract(lst[{i}], 'doc_id') END AS did,
-        CASE WHEN len(lst) >= {i}
-             THEN CAST(least(struct_extract(lst[{i}], 'tok'), {b})
-                       AS INT) END AS ctok,
-        CASE WHEN len(lst) >= {i}
-             THEN CAST(struct_extract(lst[{i}], 'tok')
-                       - least(struct_extract(lst[{i}], 'tok'), {b})
-                       AS INT) END AS tr
-    FROM {m}{i - 1}
-),
-{h}{i} AS MATERIALIZED (
+    return (
+        _elem_cte(i, m)
+        + f""",
+{m}_h{i} AS MATERIALIZED (
     SELECT shard, lst, seqs, did, ctok, tr,
         (list_filter(list_transform(range(1, len(seqs) + 1),
              j -> CASE WHEN struct_extract(seqs[j], 'n_tokens') + ctok
                             <= {b} THEN j END),
              v -> v IS NOT NULL))[1] AS fidx
-    FROM {g}{i}
+    FROM {m}_x{i}
 ),
 {m}{i} AS MATERIALIZED (
     SELECT shard, lst,
@@ -646,130 +447,110 @@ def _ff_step(i: int, m: str = "m", g: str = "g", h: str = "h") -> str:
              first_doc := CAST(did AS BIGINT),
              last_doc := CAST(did AS BIGINT)))
         END AS seqs
-    FROM {h}{i}
+    FROM {m}_h{i}
+)"""
+    )
+
+
+def _chain(m: str, step=_pack_step, order_by: str = "doc_id") -> str:
+    """A whole unrolled packing chain over ``dtok``, CTE names prefixed
+    ``m`` so several chains coexist in one oracle; the packed shards
+    end in ``{m}{DOCS_PER_SHARD}``."""
+    return ",\n".join(
+        [_chain_start(m, order_by)]
+        + [step(i, m) for i in range(1, DOCS_PER_SHARD + 1)]
+    )
+
+
+def _seqs_sql(m: str) -> str:
+    """The packed sequences of chain ``m``, one ``(shard, q)`` row each."""
+    return f"(SELECT shard, unnest(seqs) AS q FROM {m}{DOCS_PER_SHARD})"
+
+
+def _manifest_sql(m: str) -> str:
+    """The DuckDB twin of :func:`_manifest` over chain ``m``."""
+    return f"""SELECT shard,
+       struct_extract(q, 'seq_idx') AS seq_idx,
+       struct_extract(q, 'n_docs') AS n_docs,
+       struct_extract(q, 'n_tokens') AS n_tokens,
+       struct_extract(q, 'n_trunc') AS n_trunc_tokens,
+       {_ppm_sql("struct_extract(q, 'n_tokens')", str(SEQ_BUDGET))}
+           AS fill_ppm,
+       struct_extract(q, 'first_doc') AS first_doc_id,
+       struct_extract(q, 'last_doc') AS last_doc_id
+FROM {_seqs_sql(m)}
+"""
+
+
+def _fills_cte(name: str, m: str) -> str:
+    """The DuckDB twin of :func:`_fills` over chain ``m``."""
+    tok = "struct_extract(q, 'n_tokens')"
+    return f"""{name} AS (
+    SELECT CAST(count(*) AS BIGINT) AS n_sequences,
+           CAST(sum({tok}) AS BIGINT) AS n_packed_tokens,
+           CAST(sum(struct_extract(q, 'n_trunc')) AS BIGINT)
+               AS n_truncated_tokens,
+           CAST(sum(CASE WHEN {tok} = {SEQ_BUDGET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_exact_full,
+           {_ppm_sql(f"sum({tok})", f"(count(*) * {SEQ_BUDGET})")}
+               AS avg_fill_ppm
+    FROM {_seqs_sql(m)}
 )"""
 
 
-_FF_CTES = (
-    "WITH "
-    + ",\n".join(_bpe_ctes())
+_ENCODE = "WITH " + _encode_ctes("documents") + ",\n"
+
+#: the FFD chain: first-fit steps over the decreasing visit order.
+_FFD_CHAIN = _chain("f", _ff_step, "tok DESC, doc_id")
+
+PACK_SEQUENCES_ORACLE = _ENCODE + _chain("k") + "\n" + _manifest_sql("k")
+
+PACKING_STATS_ORACLE = (
+    _ENCODE
+    + _chain("k")
     + ",\n"
-    + _DTOK_CTE
-    + ",\n"
-    + _FF_START
-    + ",\n"
-    + ",\n".join(_ff_step(i) for i in range(1, DOCS_PER_SHARD + 1))
+    + _fills_cte("sa", "k")
+    + """,
+ia AS (
+    SELECT CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(tok) AS BIGINT) AS n_input_tokens
+    FROM dtok
 )
-
-
-PACK_FF_ORACLE = (
-    _FF_CTES
-    + f""",
-seq AS (SELECT shard, unnest(seqs) AS q FROM m{DOCS_PER_SHARD})
-SELECT shard,
-       struct_extract(q, 'seq_idx') AS seq_idx,
-       struct_extract(q, 'n_docs') AS n_docs,
-       struct_extract(q, 'n_tokens') AS n_tokens,
-       struct_extract(q, 'n_trunc') AS n_trunc_tokens,
-       CAST(floor(struct_extract(q, 'n_tokens') * 1000000.0
-                  / {SEQ_BUDGET} + 0.5) AS BIGINT) AS fill_ppm,
-       struct_extract(q, 'first_doc') AS first_doc_id,
-       struct_extract(q, 'last_doc') AS last_doc_id
-FROM seq
+SELECT ia.n_docs, ia.n_input_tokens, sa.n_sequences,
+       sa.n_packed_tokens, sa.n_truncated_tokens, sa.n_exact_full,
+       sa.avg_fill_ppm
+FROM ia, sa
 """
 )
 
+PACK_FF_ORACLE = _ENCODE + _chain("m", _ff_step) + "\n" + _manifest_sql("m")
 
-#: the FFD chain: the identical first-fit step unrolled off the
-#: decreasing-order shard lists (prefixes fg/fh/f keep it disjoint
-#: from the FF chain's g/h/m so both can coexist in one oracle).
-_FFD_CHAIN = (
-    _SHD_CTE
-    + ",\n"
-    + _ff_start("f", "shd")
-    + ",\n"
-    + ",\n".join(
-        _ff_step(i, m="f", g="fg", h="fh")
-        for i in range(1, DOCS_PER_SHARD + 1)
-    )
-)
-
-
-_FFD_CTES = (
-    "WITH "
-    + ",\n".join(_bpe_ctes())
-    + ",\n"
-    + _DTOK_CTE
-    + ",\n"
-    + _FFD_CHAIN
-)
-
-
-PACK_FFD_ORACLE = (
-    _FFD_CTES
-    + f""",
-seq AS (SELECT shard, unnest(seqs) AS q FROM f{DOCS_PER_SHARD})
-SELECT shard,
-       struct_extract(q, 'seq_idx') AS seq_idx,
-       struct_extract(q, 'n_docs') AS n_docs,
-       struct_extract(q, 'n_tokens') AS n_tokens,
-       struct_extract(q, 'n_trunc') AS n_trunc_tokens,
-       CAST(floor(struct_extract(q, 'n_tokens') * 1000000.0
-                  / {SEQ_BUDGET} + 0.5) AS BIGINT) AS fill_ppm,
-       struct_extract(q, 'first_doc') AS first_doc_id,
-       struct_extract(q, 'last_doc') AS last_doc_id
-FROM seq
-"""
-)
-
+PACK_FFD_ORACLE = _ENCODE + _FFD_CHAIN + "\n" + _manifest_sql("f")
 
 #: all three chains share the BPE replay + dtok, then aggregate each.
 FILL_COMPARE_ORACLE = (
-    _PACK_CTES
-    + ",\n"
-    + _FF_START
-    + ",\n"
-    + ",\n".join(_ff_step(i) for i in range(1, DOCS_PER_SHARD + 1))
-    + ",\n"
-    + _FFD_CHAIN
-    + f""",
-nfq AS (SELECT unnest(seqs) AS q FROM k{DOCS_PER_SHARD}),
-ffq AS (SELECT unnest(seqs) AS q FROM m{DOCS_PER_SHARD}),
-fdq AS (SELECT unnest(seqs) AS q FROM f{DOCS_PER_SHARD}),
-nfa AS (
-    SELECT CAST(count(*) AS BIGINT) AS nf_sequences,
-           CAST(floor(sum(struct_extract(q, 'n_tokens')) * 1000000.0
-                      / (count(*) * {SEQ_BUDGET}) + 0.5) AS BIGINT)
-               AS nf_avg_fill_ppm,
-           CAST(sum(struct_extract(q, 'n_tokens')) AS BIGINT)
-               AS n_packed_tokens
-    FROM nfq
-),
-ffa AS (
-    SELECT CAST(count(*) AS BIGINT) AS ff_sequences,
-           CAST(floor(sum(struct_extract(q, 'n_tokens')) * 1000000.0
-                      / (count(*) * {SEQ_BUDGET}) + 0.5) AS BIGINT)
-               AS ff_avg_fill_ppm,
-           CAST(sum(struct_extract(q, 'n_tokens')) AS BIGINT)
-               AS ff_packed_tokens
-    FROM ffq
-),
-fda AS (
-    SELECT CAST(count(*) AS BIGINT) AS ffd_sequences,
-           CAST(floor(sum(struct_extract(q, 'n_tokens')) * 1000000.0
-                      / (count(*) * {SEQ_BUDGET}) + 0.5) AS BIGINT)
-               AS ffd_avg_fill_ppm,
-           CAST(sum(struct_extract(q, 'n_tokens')) AS BIGINT)
-               AS ffd_packed_tokens
-    FROM fdq
-)
-SELECT nfa.nf_sequences, ffa.ff_sequences, fda.ffd_sequences,
-       CAST(nfa.nf_sequences - ffa.ff_sequences AS BIGINT) AS ff_saved,
-       CAST(nfa.nf_sequences - fda.ffd_sequences AS BIGINT) AS ffd_saved,
-       nfa.nf_avg_fill_ppm, ffa.ff_avg_fill_ppm, fda.ffd_avg_fill_ppm,
+    _ENCODE
+    + ",\n".join(
+        [
+            _chain("k"),
+            _chain("m", _ff_step),
+            _FFD_CHAIN,
+            _fills_cte("nfa", "k"),
+            _fills_cte("ffa", "m"),
+            _fills_cte("fda", "f"),
+        ]
+    )
+    + """
+SELECT nfa.n_sequences AS nf_sequences, ffa.n_sequences AS ff_sequences,
+       fda.n_sequences AS ffd_sequences,
+       CAST(nfa.n_sequences - ffa.n_sequences AS BIGINT) AS ff_saved,
+       CAST(nfa.n_sequences - fda.n_sequences AS BIGINT) AS ffd_saved,
+       nfa.avg_fill_ppm AS nf_avg_fill_ppm,
+       ffa.avg_fill_ppm AS ff_avg_fill_ppm,
+       fda.avg_fill_ppm AS ffd_avg_fill_ppm,
        nfa.n_packed_tokens,
-       ffa.ff_packed_tokens = nfa.n_packed_tokens
-         AND fda.ffd_packed_tokens = nfa.n_packed_tokens
+       ffa.n_packed_tokens = nfa.n_packed_tokens
+         AND fda.n_packed_tokens = nfa.n_packed_tokens
            AS tokens_conserved
 FROM nfa, ffa, fda
 """

@@ -116,3 +116,29 @@ def test_encode_totals_match_training_audit(spark, sf_dir):
         assert r["n_bpe_tokens"] <= r["n_char_syms"]  # merges only shrink
         assert r["n_bpe_tokens"] >= r["n_words"]  # at least 1 sym/word
         assert r["compression_ppm"] <= 1000000
+
+
+def test_each_packing_query_trains_bpe_once(spark, sf_dir, monkeypatch):
+    """Every query on the tokenize -> pack path runs the BPE trainer
+    exactly once, however many packers it feeds."""
+    from bigdata_pipelines_aws_glue_spark.operators import bpe
+    from bigdata_pipelines_aws_glue_spark.operators.funnel import (
+        corpus_funnel_stats,
+    )
+    from bigdata_pipelines_aws_glue_spark.operators.packing import (
+        packing_fill_compare,
+        packing_stats,
+    )
+
+    calls = []
+    train = bpe._train_bpe
+
+    def counted(*args):
+        calls.append(args)
+        return train(*args)
+
+    monkeypatch.setattr(bpe, "_train_bpe", counted)
+    for query in (packing_stats, packing_fill_compare, corpus_funnel_stats):
+        calls.clear()
+        query(spark, sf_dir).collect()
+        assert len(calls) == 1, (query.__name__, len(calls))

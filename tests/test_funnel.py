@@ -86,15 +86,16 @@ def test_funnel_tokens_exceed_plain_encode(spark, sf_dir):
     from bigdata_pipelines_aws_glue_spark.operators.bpe import (
         bpe_encode_corpus,
     )
+    from bigdata_pipelines_aws_glue_spark.operators.bpe import _doc_tokens
     from bigdata_pipelines_aws_glue_spark.operators.funnel import (
         _base_frame,
         _dedup_urls,
         _host_cap,
-        _survivor_tokens,
+        _quality_kept,
     )
 
     curated = _host_cap(_dedup_urls(_base_frame(spark, sf_dir)))
-    toks = _survivor_tokens(spark, sf_dir, curated)
+    toks = _doc_tokens(spark, sf_dir, _quality_kept(curated))
     enc = bpe_encode_corpus(spark, sf_dir).select(
         "doc_id", "n_bpe_tokens"
     )

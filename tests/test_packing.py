@@ -302,14 +302,16 @@ def test_corpus_ffd_manifest(spark, sf_dir):
         pack_sequences_ffd,
     )
 
-    from bigdata_pipelines_aws_glue_spark.operators.packing import (
-        _doc_tokens,
-    )
+    from bigdata_pipelines_aws_glue_spark.operators.bpe import _doc_tokens
+    from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
     seqs = pack_sequences_ffd(spark, sf_dir).collect()
     assert seqs
     tok_by_doc = {
-        r["doc_id"]: r["tok"] for r in _doc_tokens(spark, sf_dir).collect()
+        r["doc_id"]: r["tok"]
+        for r in _doc_tokens(
+            spark, sf_dir, load_table(spark, sf_dir, "documents")
+        ).collect()
     }
     by_shard: dict[int, list] = {}
     for s in seqs:
