@@ -13,9 +13,11 @@ chain survives (deterministic keep-one policy).
 Here the coarse structure is the same quantized per-label centroid
 index ``ivf_topk`` uses (``similarity.label_centroids`` — trained on
 the base corpus, then applied to the batch being deduped, the
-production shape), which is what makes the WHOLE pipeline — centroid
-training, nearest-cell assignment, within-cell pairing, prune rule —
-replayable bit-for-bit in the DuckDB twin. The dedup target is the
+production shape) and the same cell ranker on both engines
+(``similarity._ranked_cells`` / ``_sql_cell_ctes``), which is what
+makes the WHOLE pipeline — centroid training, nearest-cell
+assignment, within-cell pairing, prune rule — replayable
+bit-for-bit in the DuckDB twin. The dedup target is the
 corpus unioned with an id-offset copy of itself (same simulated
 re-ingestion as ``dedup_embedding_cosine``): every copy must land in
 its twin's cell and be pruned at cosine ~1.0, while the base corpus
@@ -36,7 +38,7 @@ on vec_id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
@@ -44,6 +46,8 @@ from bigdata_pipelines_aws_glue_spark.functions.rounding import stable_round
 from bigdata_pipelines_aws_glue_spark.operators.similarity import (
     DUP_OFFSET,
     _as_double,
+    _ranked_cells,
+    _sql_cell_ctes,
     dot,
     label_centroids,
     norm,
@@ -69,24 +73,12 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vec_id") + DUP_OFFSET).alias("vec_id"), F.col("embedding")
         )
     )
-    v = doubled.select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    ).withColumn("n", norm(F.col("v")))
-    scored = v.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "n",
-        "cell",
-        (dot(F.col("v"), F.col("cvec")) / (F.col("n") * norm(F.col("cvec"))))
-        .alias("cell_score"),
-    )
-    w_cell = Window.partitionBy("vec_id").orderBy(
-        F.col("cell_score").desc(), F.col("cell")
-    )
+    v = doubled.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     assigned = (
-        scored.withColumn("cr", F.row_number().over(w_cell))
+        _ranked_cells(v, cents)
         .filter(F.col("cr") == 1)
-        .select("vec_id", "v", "n", "cell")
+        .select("vec_id", "v", "cell")
+        .withColumn("n", norm(F.col("v")))
     )
     members = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_cell_members")
@@ -132,34 +124,9 @@ v AS (
            sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
     FROM doubled
 ),
-cents AS (
-    SELECT cell, list(cv ORDER BY dim) AS cvec FROM (
-        SELECT label AS cell, dim,
-               (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
-                  / 1000000000.0)
-                 / count(*) AS cv
-        FROM (
-            SELECT label,
-                   generate_subscripts(embedding, 1) - 1 AS dim,
-                   unnest(embedding::DOUBLE[]) AS val
-            FROM embeddings)
-        GROUP BY label, dim)
-    GROUP BY cell
-),
-cell_scored AS (
-    SELECT v.vec_id, v.e, v.nrm, c.cell,
-           list_dot_product(v.e, c.cvec)
-             / (v.nrm * sqrt(list_dot_product(c.cvec, c.cvec)))
-             AS cell_score
-    FROM v CROSS JOIN cents c
-),
+{_sql_cell_ctes("v")},
 assigned AS (
-    SELECT vec_id, e, nrm, cell FROM (
-        SELECT vec_id, e, nrm, cell,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cell_score DESC, cell) AS cr
-        FROM cell_scored)
-    WHERE cr = 1
+    SELECT vec_id, e, nrm, cell FROM ranked_cells WHERE cr = 1
 ),
 members AS (
     SELECT cell, CAST(count(*) AS BIGINT) AS n_cell_members

@@ -1,24 +1,45 @@
 """Similarity search over embeddings ([north-star] N3, BASELINE.json:6).
 
-Three tiers, mirroring how ANN is actually deployed at scale:
+Query families, each hash-checked against a DuckDB twin:
 
-1. ``cosine_topk`` — exact brute force: broadcast the (small) query
-   set against the full corpus; vector math via ``zip_with`` /
-   ``aggregate`` higher-order functions (JVM codegen, no Python).
-   The baseline every approximate method is validated against.
-2. ``ann_lsh_topk`` — random-hyperplane LSH: 16-bit signatures via
-   deterministic pseudo-random planes, Hamming-bucket candidate
-   generation, exact re-scoring of candidates only. The 100 TB path:
-   candidate generation is a hash-bucket equi-join, never a cross
-   join.
-3. ``embedding_centroids`` — per-label mean vector (posexplode +
-   re-assemble), the building block for IVF-style coarse quantization.
+- exact brute force: ``cosine_topk`` (full vectors), ``matryoshka_topk``
+  (the first ``MATRYOSHKA_DIMS`` dims) and ``exact_l2_topk`` (the PQ
+  recall reference) — the bounded query sample broadcast against the
+  corpus, vector math in ``zip_with``/``aggregate`` (JVM codegen);
+- banded LSH: ``ann_lsh_topk`` / ``ann_lsh_multiprobe_topk`` —
+  random-hyperplane signatures, band-bucket candidates, exact cosine
+  re-scoring of candidates only;
+- IVF: ``ivf_topk`` — per-label centroid cells, ``N_PROBE`` cells
+  probed per query;
+- PQ: ``pq_topk`` / ``pq_topk_sampled`` (asymmetric distance over
+  5-bit codes) and ``ivfpq_topk`` (IVF-pruned ADC shortlist, exact
+  cosine re-rank);
+- binary: one-word and multi-word sign signatures, brute-force
+  Hamming and multi-index hashing (MIH, single- and multi-probe),
+  plus asymmetric scoring;
+- the ``*_recall_at10`` audits of each path, ``embedding_centroids``,
+  ``dedup_embedding_cosine`` and Lloyd's k-means / PQ training.
+
+Every search is built from one copy per engine of each stage:
+
+- ``_topk`` / ``_sql_topk``: the per-query top-K ranker
+  (``row_number`` over query_id by metric, then neighbor_id — the
+  cross-engine tie-break);
+- ``_band_candidates`` / ``_sql_band_ctes``: the (band, key)
+  candidate equi-join with optional query-side XOR probes (LSH, MIH);
+- ``_ranked_cells`` / ``_sql_cell_ctes``: the IVF cell ranker (also
+  ``semdedup.semdedup_prune``'s cell assignment);
+- ``_adc_tables`` / ``_pq_ctes``: the quantized asymmetric-distance
+  table and the exploded neighbour codes (PQ, IVF-PQ).
 
 Embeddings are ``array<float>``; all math casts to double first so
 the DuckDB oracle (which computes in double) matches bit-for-bit.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -56,73 +77,62 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector (excluding
-    self). Query side is broadcast — the corpus never shuffles; the
-    per-query ranking is a window top-k (local heaps, no global
-    sort)."""
+def _topk(scored: DataFrame, metric: Column, k: int = TOP_K) -> DataFrame:
+    """The one per-query top-K ranker: ``rank`` is the row_number over
+    ``query_id`` ordered by ``metric``, ties broken on neighbor_id (the
+    cross-engine determinism contract; DuckDB twin ``_sql_topk``), and
+    rows with rank <= k are kept. A per-query window top-k: local
+    heaps, no global sort."""
+    w = Window.partitionBy("query_id").orderBy(metric, F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_ranked(scored: DataFrame) -> DataFrame:
+    """Top-K by cosine ``score`` DESC, emitted with the score rounded
+    to 8 decimals."""
+    return _topk(scored, F.col("score").desc()).select(
+        "query_id",
+        "neighbor_id",
+        "rank",
+        stable_round(F.col("score"), 8).alias("score"),
+    )
+
+
+def _brute_cosine_topk(
+    spark: SparkSession, sf_dir: str, vec: Column
+) -> DataFrame:
+    """Exact top-k cosine neighbors of each query vector (excluding
+    self) over ``vec``, an expression of ``embedding``. Query side is
+    broadcast — the corpus never shuffles; norms are computed once
+    per side, not per pair."""
     from bigdata_pipelines_aws_glue_spark.operators.skew import spread
 
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    # norms precomputed once per side — not per pair (3x fewer folds)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        _as_double(F.col("embedding")).alias("qv"),
+        F.col("vec_id").alias("query_id"), vec.alias("qv")
     ).withColumn("qn", norm(F.col("qv")))
     base = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double(F.col("embedding")).alias("bv"),
+        F.col("vec_id").alias("neighbor_id"), vec.alias("bv")
     ).withColumn("bn", norm(F.col("bv")))
-    scored = (
-        base.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("bv")) / (F.col("qn") * F.col("bn"))).alias(
-                "score"
-            ),
-        )
+    scored = base.join(
+        F.broadcast(queries), F.col("query_id") != F.col("neighbor_id")
+    ).select(
+        "query_id",
+        "neighbor_id",
+        (dot(F.col("qv"), F.col("bv")) / (F.col("qn") * F.col("bn"))).alias(
+            "score"
+        ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
-        )
-    )
+    return _cosine_ranked(scored)
 
 
-COSINE_TOPK_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-    FROM embeddings WHERE vec_id < {N_QUERIES}
-),
-b AS (
-    SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS bv FROM embeddings
-),
-scored AS (
-    SELECT query_id, neighbor_id,
-           list_dot_product(qv, bv)
-             / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(bv, bv)))
-             AS score
-    FROM q JOIN b ON query_id <> neighbor_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor((score) * 100000000.0 + 0.5) / 100000000.0 AS score
-FROM ranked WHERE rank <= {TOP_K}
-"""
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k over the full vectors — the baseline every
+    approximate method is validated against."""
+    return _brute_cosine_topk(spark, sf_dir, _as_double(F.col("embedding")))
+
 
 N_PLANES = 16
 
@@ -200,11 +210,52 @@ def _band_keys(sig: Column) -> Column:
 PROBE_MASKS = tuple([0] + [1 << i for i in range(BITS_PER_BAND)])
 
 
+def _band_candidates(
+    bands: DataFrame, probes: tuple[int, ...] = (0,)
+) -> DataFrame:
+    """The one band-bucket candidate join: from ``bands(vec_id, x,
+    band, key)``, the distinct (query_id, neighbor_id, qx, nx) pairs
+    of a query-sample vector and another vector sharing a (band, key)
+    bucket. With more probes than the exact key, each query band key
+    is also probed XOR every mask — on the bounded query side only,
+    the corpus side is never expanded (index once, probe wider). An
+    equi-join: never a nested loop or a cross join at any size."""
+    q = bands.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("x").alias("qx"),
+        "band",
+        "key",
+    )
+    if len(probes) > 1:
+        q = q.select(
+            "query_id",
+            "qx",
+            "band",
+            F.explode(
+                F.array(*[F.col("key").bitwiseXOR(F.lit(m)) for m in probes])
+            ).alias("key"),
+        )
+    return (
+        q.join(
+            bands.select(
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("x").alias("nx"),
+                "band",
+                "key",
+            ),
+            ["band", "key"],
+        )
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", "qx", "nx")
+        .distinct()
+    )
+
+
 def _ann_lsh_topk_impl(
     spark: SparkSession, sf_dir: str, probe_masks: tuple[int, ...] = (0,)
 ) -> DataFrame:
     """Approximate top-k: candidates share at least one LSH band
-    bucket (equi-join on (band, key)), then exact cosine re-scoring of
+    bucket (:func:`_band_candidates`), then exact cosine re-scoring of
     candidates only. At 100 TB: signatures are 2 bytes/vector, the
     banded bucket join replaces the O(n²) cross join, and band count /
     probe width trade recall for fan-out."""
@@ -215,55 +266,16 @@ def _ann_lsh_topk_impl(
     )
     sig = emb.select("vec_id", "v", lsh_signature(F.col("v")).alias("sig"))
     bands = sig.select(
-        "vec_id", "v", F.explode(_band_keys(F.col("sig"))).alias("bk")
-    ).select("vec_id", "v", "bk.band", "bk.key")
-    q = bands.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        "band",
-        "key",
-    )
-    if len(probe_masks) > 1:
-        q = q.select(
-            "query_id",
-            "qv",
-            "band",
-            F.explode(
-                F.array(
-                    *[F.col("key").bitwiseXOR(F.lit(m)) for m in probe_masks]
-                )
-            ).alias("key"),
-        )
-    cand = (
-        q.join(
-            bands.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("bv"),
-                "band",
-                "key",
-            ),
-            ["band", "key"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qv", "bv")
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
+        "vec_id",
+        F.col("v").alias("x"),
+        F.explode(_band_keys(F.col("sig"))).alias("bk"),
+    ).select("vec_id", "x", "bk.band", "bk.key")
+    cand = _band_candidates(bands, probe_masks)
+    return _cosine_ranked(
         cand.select(
             "query_id",
             "neighbor_id",
-            cosine(F.col("qv"), F.col("bv")).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
+            cosine(F.col("qx"), F.col("nx")).alias("score"),
         )
     )
 
@@ -313,6 +325,29 @@ def label_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
+def _ranked_cells(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """The one IVF cell ranker: every ``vecs(vec_id, v)`` row against
+    the broadcast centroids ``cents(cell, cvec)``, ranked ``cr`` by
+    centroid cosine DESC with ties broken on ``cell``. cr = 1 is the
+    vector's own cell, cr <= N_PROBE the cells a query probes.
+    Centroids are a k-row broadcast; the corpus never shuffles for
+    the scoring. Used by ``ivf_topk``, ``ivfpq_topk`` and
+    ``semdedup_prune`` (DuckDB twin: ``_sql_cell_ctes``)."""
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("cell_score").desc(), F.col("cell")
+    )
+    return (
+        vecs.crossJoin(F.broadcast(cents))
+        .select(
+            "vec_id",
+            "v",
+            "cell",
+            cosine(F.col("v"), F.col("cvec")).alias("cell_score"),
+        )
+        .withColumn("cr", F.row_number().over(w))
+    )
+
+
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN (the other N3 scale path besides LSH): coarse
     cells = per-label centroids; each vector is indexed under its
@@ -321,55 +356,27 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast table (k rows), cell assignment is a map, and search is
     an equi-join on cell id — never a cross join. Rows-only check;
     recall vs brute force asserted in tests."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
+    emb = _corpus_vectors(spark, sf_dir)
+    cells = _ranked_cells(
+        emb, label_centroids(load_table(spark, sf_dir, "embeddings"))
     )
-    cents = label_centroids(load_table(spark, sf_dir, "embeddings"))
-    # rank cells per vector by centroid cosine
-    scored_cells = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "cell",
-        cosine(F.col("v"), F.col("cvec")).alias("cell_score"),
-    )
-    w_cell = Window.partitionBy("vec_id").orderBy(
-        F.col("cell_score").desc(), F.col("cell")
-    )
-    ranked_cells = scored_cells.withColumn("cr", F.row_number().over(w_cell))
-    index = ranked_cells.filter(F.col("cr") == 1).select(
+    index = cells.filter(F.col("cr") == 1).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("bv"),
         "cell",
     )
-    probes = (
-        ranked_cells.filter(
-            (F.col("cr") <= N_PROBE) & (F.col("vec_id") < N_QUERIES)
-        )
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell")
-    )
+    probes = cells.filter(
+        (F.col("cr") <= N_PROBE) & (F.col("vec_id") < N_QUERIES)
+    ).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell")
     cand = probes.join(index, "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
+    return _cosine_ranked(
         cand.select(
             "query_id",
             "neighbor_id",
             cosine(F.col("qv"), F.col("bv")).alias("score"),
-        )
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
-        )
+        ).distinct()
     )
 
 
@@ -382,41 +389,11 @@ def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``MATRYOSHKA_DIMS`` components) — the matryoshka-representation
     question every embedding-serving stack asks: how much recall does
     halving the vector (and the index RAM/bandwidth with it) cost?
-    Same plan shape as ``cosine_topk`` (broadcast query sample, no
-    corpus shuffle, per-query window top-k)."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    tv = F.slice(_as_double(F.col("embedding")), 1, MATRYOSHKA_DIMS)
-    queries = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), tv.alias("qv"))
-        .withColumn("qn", norm(F.col("qv")))
-    )
-    base = emb.select(
-        F.col("vec_id").alias("neighbor_id"), tv.alias("bv")
-    ).withColumn("bn", norm(F.col("bv")))
-    scored = base.join(
-        F.broadcast(queries), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        (dot(F.col("qv"), F.col("bv")) / (F.col("qn") * F.col("bn"))).alias(
-            "score"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
-        )
+    The ``cosine_topk`` query over a shorter vector."""
+    return _brute_cosine_topk(
+        spark,
+        sf_dir,
+        F.slice(_as_double(F.col("embedding")), 1, MATRYOSHKA_DIMS),
     )
 
 
@@ -465,9 +442,8 @@ def ivf_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_exact(cosine_topk(spark, sf_dir), ivf_topk(spark, sf_dir))
 
 
-#: Shared SQL fragments for the recall oracles. ``_SQL_VN`` gives every
-#: vector its norm once; ``_SQL_EXACT_TOPK`` is the brute-force side.
-_SQL_VN = f"""
+#: Shared SQL fragments. ``_SQL_VN`` gives every vector its norm once.
+_SQL_VN = """
 vn AS (
     SELECT vec_id, embedding::DOUBLE[] AS e,
            sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -475,21 +451,47 @@ vn AS (
 )
 """
 
-_SQL_EXACT_TOPK = f"""
-exact_scored AS (
+
+def _sql_topk(src: str, metric: str, k: int = TOP_K) -> str:
+    """The one SQL top-K ranker, twin of :func:`_topk`: the rows of
+    ``src`` with ``rank`` <= k, rank = row_number over query_id
+    ordered by ``metric`` then neighbor_id."""
+    return f"""SELECT * FROM (
+    SELECT *, row_number() OVER (PARTITION BY query_id
+                                 ORDER BY {metric}, neighbor_id) AS rank
+    FROM {src})
+WHERE rank <= {k}"""
+
+
+def _sql_topk_select(src: str, metric: str, out: str) -> str:
+    """Final select of a standalone top-K oracle: the ranked rows of
+    ``src`` with an INT rank and the output column(s) ``out``."""
+    return f"""
+SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, {out}
+FROM ({_sql_topk(src, metric)})
+"""
+
+
+#: 8-decimal rounding of the score columns (``stable_round(_, 8)``).
+_SQL_SCORE = "floor(score * 100000000.0 + 0.5) / 100000000.0 AS score"
+_SQL_APPROX_DIST = (
+    "floor(approx_dist * 100000000.0 + 0.5) / 100000000.0 AS approx_dist"
+)
+
+
+def _sql_cosine_scored(name: str, vecs: str) -> str:
+    """``name``: the cosine of every query-sample vector of
+    ``vecs(vec_id, e, nrm)`` against every other vector — the SQL
+    brute-force body of :func:`_brute_cosine_topk`."""
+    return f"""{name} AS (
     SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
            list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
-    FROM vn q JOIN vn b ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id
-),
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, neighbor_id) AS rank
-        FROM exact_scored)
-    WHERE rank <= {TOP_K}
-)
-"""
+    FROM {vecs} q JOIN {vecs} b ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id
+)"""
+
+
+#: The exact cosine side of the recall oracles.
+_SQL_EXACT = _sql_cosine_scored("exact_scored", "vn")
 
 _SQL_RECALL_SELECT = f"""
 SELECT e.query_id,
@@ -500,16 +502,93 @@ FROM exact_topk e LEFT JOIN ann_topk a
 GROUP BY e.query_id
 """
 
+
+def _sql_recall(
+    ann: str,
+    ann_metric: str,
+    exact: str = "exact_scored",
+    exact_metric: str = "score DESC",
+) -> str:
+    """Twin of :func:`_recall_vs_exact`: the ``ann_topk`` and
+    ``exact_topk`` CTEs ranked from the ``ann`` and ``exact`` scored
+    relations, then the per-query recall select."""
+    return f"""ann_topk AS ({_sql_topk(ann, ann_metric)}),
+exact_topk AS ({_sql_topk(exact, exact_metric)})
+{_SQL_RECALL_SELECT}"""
+
+
+COSINE_TOPK_ORACLE = f"""WITH {_SQL_VN},
+{_SQL_EXACT}
+{_sql_topk_select("exact_scored", "score DESC", _SQL_SCORE)}"""
+
+#: matryoshka vectors: the first MATRYOSHKA_DIMS dims and their norm.
+_SQL_VT = f"""vt AS (
+    SELECT vec_id, list_slice(e, 1, {MATRYOSHKA_DIMS}) AS e,
+           sqrt(list_dot_product(list_slice(e, 1, {MATRYOSHKA_DIMS}),
+                                 list_slice(e, 1, {MATRYOSHKA_DIMS}))) AS nrm
+    FROM vn
+)"""
+
+MATRYOSHKA_TOPK_ORACLE = f"""WITH {_SQL_VN},
+{_SQL_VT},
+{_sql_cosine_scored("ann_scored", "vt")}
+{_sql_topk_select("ann_scored", "score DESC", _SQL_SCORE)}"""
+
+MATRYOSHKA_RECALL_ORACLE = f"""WITH {_SQL_VN},
+{_SQL_EXACT},
+{_SQL_VT},
+{_sql_cosine_scored("ann_scored", "vt")},
+{_sql_recall("ann_scored", "score DESC")}"""
+
+
+def _sql_band_ctes(
+    word: str, n_bands: int, bits: int, probes: tuple[int, ...]
+) -> str:
+    """The one SQL band-bucket candidate join, twin of
+    :func:`_band_candidates`, over a ``sigs(vec_id, ...)`` CTE in
+    scope:
+
+    - ``bands``: (vec_id, band, bkey) — band b's ``bits``-wide key,
+      cut by shift + mask (shift convention irrelevant under the mask)
+      from ``word``, the SQL expression of ``band`` giving the 64-bit
+      signature word that holds it;
+    - ``qbands``: the query sample's bands, each key XOR every probe
+      mask when there is more than the exact key;
+    - ``cand``: the distinct (query_id, neighbor_id) pairs sharing a
+      (band, bkey), self-matches dropped."""
+    qkey = "bkey\n    FROM bands"
+    if len(probes) > 1:
+        masks = ", ".join(str(m) for m in probes)
+        qkey = (
+            "xor(bkey, pm.m) AS bkey\n    FROM bands CROSS JOIN"
+            f" (SELECT unnest([{masks}]) AS m) pm"
+        )
+    return f"""bands AS (
+    SELECT vec_id, band,
+           ({word} >> ((band % {64 // bits}) * {bits})) & {(1 << bits) - 1}
+             AS bkey
+    FROM sigs CROSS JOIN
+         (SELECT unnest(generate_series(0, {n_bands - 1})) AS band) bd
+),
+qbands AS (
+    SELECT vec_id, band, {qkey}
+    WHERE vec_id < {N_QUERIES}
+),
+cand AS (
+    SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
+    FROM qbands q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
+    WHERE q.vec_id <> n.vec_id
+)"""
+
+
 #: Bit-for-bit SQL replay of ``lsh_signature``/``_band_keys``/
 #: ``_ann_lsh_topk_impl``: the LCG runs in BIGINT (INT32 would
 #: overflow), the projection is the same in-order product fold
-#: (list_dot_product), the signature assembles as an order-independent
-#: integer sum, and the query side probes ``xor(bkey, m)`` for each
-#: probe mask (mask 0 alone = single-probe).
+#: (list_dot_product), and the signature assembles as an
+#: order-independent integer sum.
 def _lsh_ann_ctes(probe_masks: tuple[int, ...]) -> str:
     """CTE prefix replaying the LSH pipeline through ``ann_scored`` —
     shared by the standalone top-k oracle and the recall oracles."""
-    masks = ", ".join(str(m) for m in probe_masks)
     return f"""{_SQL_VN},
 sigbits AS (
     SELECT vec_id,
@@ -527,23 +606,7 @@ sigs AS (
     SELECT vec_id, CAST(sum(bit) AS BIGINT) AS sig FROM sigbits
     GROUP BY vec_id
 ),
-bands AS (
-    SELECT s.vec_id, bd.b AS band,
-           (s.sig >> (bd.b * {BITS_PER_BAND})) & {(1 << BITS_PER_BAND) - 1}
-             AS bkey
-    FROM sigs s CROSS JOIN
-         (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS b) bd
-),
-qbands AS (
-    SELECT vec_id, band, xor(bkey, pm.m) AS bkey
-    FROM bands CROSS JOIN (SELECT unnest([{masks}]) AS m) pm
-    WHERE vec_id < {N_QUERIES}
-),
-cand AS (
-    SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-    FROM qbands q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id <> n.vec_id
-),
+{_sql_band_ctes("sig", LSH_BANDS, BITS_PER_BAND, probe_masks)},
 ann_scored AS (
     SELECT c.query_id, c.neighbor_id,
            list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS score
@@ -553,42 +616,18 @@ ann_scored AS (
 )"""
 
 
-#: Final select shared by the standalone ANN top-k oracles: same rank
-#: window and 8-decimal rounding as the Spark output.
-_SQL_ANN_TOPK_SELECT = f"""
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor((score) * 100000000.0 + 0.5) / 100000000.0 AS score
-FROM (
-    SELECT query_id, neighbor_id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id) AS rank
-    FROM ann_scored)
-WHERE rank <= {TOP_K}
-"""
-
-_SQL_ANN_RECALL_TAIL = f"""
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, neighbor_id) AS rank
-        FROM ann_scored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-
 def _lsh_recall_sql(probe_masks: tuple[int, ...]) -> str:
-    return f"WITH {_lsh_ann_ctes(probe_masks)},\n{_SQL_ANN_RECALL_TAIL}"
+    return f"""WITH {_lsh_ann_ctes(probe_masks)},
+{_SQL_EXACT},
+{_sql_recall("ann_scored", "score DESC")}"""
 
 
 #: ``ann_lsh_topk``'s own oracle: the same pipeline replay, ending at
 #: the ranked, rounded top-k — the LCG hyperplanes make even the
 #: "approximate" index exactly reproducible cross-engine, so this
 #: entry is hash-checked rather than rows-only.
-LSH_TOPK_ORACLE = f"WITH {_lsh_ann_ctes((0,))}\n{_SQL_ANN_TOPK_SELECT}"
+LSH_TOPK_ORACLE = f"""WITH {_lsh_ann_ctes((0,))}
+{_sql_topk_select("ann_scored", "score DESC", _SQL_SCORE)}"""
 LSH_RECALL_ORACLE = _lsh_recall_sql((0,))
 MULTIPROBE_LSH_RECALL_ORACLE = _lsh_recall_sql(PROBE_MASKS)
 
@@ -602,13 +641,13 @@ def ann_lsh_multiprobe_recall_at10(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-#: SQL replay of ``ivf_topk``'s INDEX (through cell probing):
-#: quantized centroid means (long-summed on the Spark side, exact
-#: BIGINT-summed here), cell ranking and probing with the same
-#: (score DESC, cell) tie-break. Shared by the IVF oracles (which add
-#: exact in-cell scoring) and the IVF-PQ oracle (which adds ADC).
-_IVF_INDEX_CTES = f"""{_SQL_VN},
-cents AS (
+def _sql_cell_ctes(src: str) -> str:
+    """The one SQL IVF cell ranker, twin of :func:`_ranked_cells`, over
+    ``src(vec_id, e, nrm)``: quantized centroid means (``cents``,
+    long-summed on the Spark side, exact BIGINT-summed here), every
+    vector against every centroid (``cell_scored``) and the
+    (score DESC, cell) rank ``cr`` (``ranked_cells``)."""
+    return f"""cents AS (
     SELECT cell, list(cv ORDER BY dim) AS cvec FROM (
         SELECT label AS cell, dim,
                (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
@@ -627,14 +666,21 @@ cell_scored AS (
            list_dot_product(v.e, c.cvec)
              / (v.nrm * sqrt(list_dot_product(c.cvec, c.cvec)))
              AS cell_score
-    FROM vn v CROSS JOIN cents c
+    FROM {src} v CROSS JOIN cents c
 ),
 ranked_cells AS (
     SELECT vec_id, e, nrm, cell,
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY cell_score DESC, cell) AS cr
     FROM cell_scored
-),
+)"""
+
+
+#: SQL replay of ``ivf_topk``'s INDEX (through cell probing). Shared
+#: by the IVF oracles (which add exact in-cell scoring) and the IVF-PQ
+#: oracles (which add ADC).
+_IVF_INDEX_CTES = f"""{_SQL_VN},
+{_sql_cell_ctes("vn")},
 idx AS (
     SELECT vec_id AS neighbor_id, e AS be, nrm AS bn, cell
     FROM ranked_cells WHERE cr = 1
@@ -652,11 +698,14 @@ ann_scored AS (
     WHERE p.query_id <> i.neighbor_id
 )"""
 
-IVF_RECALL_ORACLE = f"WITH {_IVF_ANN_CTES},\n{_SQL_ANN_RECALL_TAIL}"
+IVF_RECALL_ORACLE = f"""WITH {_IVF_ANN_CTES},
+{_SQL_EXACT},
+{_sql_recall("ann_scored", "score DESC")}"""
 
 #: ``ivf_topk``'s own oracle — quantized centroids make the whole
 #: index deterministic, so the approximate result itself hash-checks.
-IVF_TOPK_ORACLE = f"WITH {_IVF_ANN_CTES}\n{_SQL_ANN_TOPK_SELECT}"
+IVF_TOPK_ORACLE = f"""WITH {_IVF_ANN_CTES}
+{_sql_topk_select("ann_scored", "score DESC", _SQL_SCORE)}"""
 
 
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,38 +749,34 @@ NEAR_DUP_THRESHOLD = 0.99
 
 
 def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = NEAR_DUP_THRESHOLD, blocked: bool = False
+    emb: DataFrame, threshold: float = NEAR_DUP_THRESHOLD
 ) -> DataFrame:
-    """[north-star] N2 embedding-cosine near-dup: all pairs with cosine
-    >= threshold. Norms computed once per side; ``blocked=True`` routes
-    pair generation through hyperplane-LSH band buckets (the 100 TB
-    path: near-identical vectors share all band keys, so the self-join
-    is per-bucket instead of O(n²); exact cosine then verifies each
-    candidate). The unblocked form is the oracle-checkable baseline."""
+    """[north-star] N2 embedding-cosine near-dup: the pairs with cosine
+    >= threshold among those sharing a hyperplane-LSH band bucket (the
+    100 TB path: near-identical vectors share all band keys, so the
+    self-join is per-bucket instead of O(n²); exact cosine then
+    verifies each candidate). Norms are computed once per vector. The
+    all-pairs reference is the DuckDB twin
+    ``EMBEDDING_NEAR_DUP_ORACLE``."""
     v = (
         emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
         .withColumn("n", norm(F.col("v")))
     )
     cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n"))
-    if blocked:
-        banded = v.select(
-            "vec_id", "v", "n",
-            F.explode(_band_keys(lsh_signature(F.col("v")))).alias("bk"),
+    banded = v.select(
+        "vec_id", "v", "n",
+        F.explode(_band_keys(lsh_signature(F.col("v")))).alias("bk"),
+    )
+    pairs = (
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            (F.col("a.bk") == F.col("b.bk"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        pairs = (
-            banded.alias("a")
-            .join(
-                banded.alias("b"),
-                (F.col("a.bk") == F.col("b.bk"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select("a.vec_id", "a.v", "a.n", "b.vec_id", "b.v", "b.n")
-            .distinct()
-        )
-    else:
-        pairs = v.alias("a").join(
-            v.alias("b"), F.col("a.vec_id") < F.col("b.vec_id")
-        )
+        .select("a.vec_id", "a.v", "a.n", "b.vec_id", "b.v", "b.n")
+        .distinct()
+    )
     return pairs.select(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
@@ -745,21 +790,19 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     with exactly its copy at cosine ~1.0 (the corpus has no natural
     pairs above 0.52, measured).
 
-    Registered with ``blocked=True`` — the hyperplane-LSH bucketed
-    plan (per-bucket equi-join, no BroadcastNestedLoopJoin). The
-    all-pairs DuckDB oracle still hash-matches because exact
-    duplicates have identical signatures, hence share every band key:
-    recall on cosine≈1.0 pairs is structurally 1.0, and the exact
-    cosine filter keeps precision exact. The unblocked baseline
-    remains available as ``embedding_near_dup_pairs(blocked=False)``
-    for bounded candidate sets."""
+    The hyperplane-LSH bucketed plan (per-bucket equi-join, no
+    BroadcastNestedLoopJoin). The all-pairs DuckDB oracle still
+    hash-matches because exact duplicates have identical signatures,
+    hence share every band key: recall on cosine≈1.0 pairs is
+    structurally 1.0, and the exact cosine filter keeps precision
+    exact."""
     emb = load_table(spark, sf_dir, "embeddings")
     doubled = emb.select("vec_id", "embedding").unionByName(
         emb.select(
             (F.col("vec_id") + DUP_OFFSET).alias("vec_id"), F.col("embedding")
         )
     )
-    return embedding_near_dup_pairs(doubled, blocked=True)
+    return embedding_near_dup_pairs(doubled)
 
 
 EMBEDDING_NEAR_DUP_ORACLE = f"""
@@ -1051,49 +1094,6 @@ def kmeans_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MATRYOSHKA_TOPK_ORACLE = f"""WITH {_SQL_VN},
-vt AS (
-    SELECT vec_id, list_slice(e, 1, {MATRYOSHKA_DIMS}) AS e,
-           sqrt(list_dot_product(list_slice(e, 1, {MATRYOSHKA_DIMS}),
-                                 list_slice(e, 1, {MATRYOSHKA_DIMS}))) AS nrm
-    FROM vn
-),
-tk AS (
-    SELECT query_id, neighbor_id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id) AS rank
-    FROM (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
-        FROM vt q JOIN vt b ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id)
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor(score * 100000000.0 + 0.5) / 100000000.0 AS score
-FROM tk WHERE rank <= {TOP_K}
-"""
-
-MATRYOSHKA_RECALL_ORACLE = f"""WITH {_SQL_VN},
-{_SQL_EXACT_TOPK.strip().lstrip()},
-vt AS (
-    SELECT vec_id, list_slice(e, 1, {MATRYOSHKA_DIMS}) AS e,
-           sqrt(list_dot_product(list_slice(e, 1, {MATRYOSHKA_DIMS}),
-                                 list_slice(e, 1, {MATRYOSHKA_DIMS}))) AS nrm
-    FROM vn
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                                  ORDER BY list_dot_product(q.e, b.e)
-                                           / (q.nrm * b.nrm) DESC,
-                                           b.vec_id) AS rank
-        FROM vt q JOIN vt b ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id)
-    WHERE rank <= {TOP_K}
-)
-{_SQL_RECALL_SELECT}
-"""
-
-
 KMEANS_CONVERGENCE_ORACLE = f"""
 SELECT {KMEANS_K} AS k,
        count(*) AS n_vectors,
@@ -1124,7 +1124,7 @@ PQ_TRAIN_TARGET = 256
 #: semantically — it models the production shape (codebooks trained
 #: once, then reused by every encode/search job) and cuts the
 #: driver's correctness pass by ~3 trainings.
-_PQ_CODEBOOK_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
+_PQ_CODEBOOK_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
 
 
 def _corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1153,22 +1153,20 @@ def _cached_codebooks(
             # training set stays ~PQ_TRAIN_TARGET rows at any scale
             mod = max(1, emb.count() // PQ_TRAIN_TARGET)
             train = emb.filter(F.col("vec_id") % mod == 0)
-        _PQ_CODEBOOK_CACHE[key] = pq_train(train, vec_col="v")
+        _PQ_CODEBOOK_CACHE[key] = pq_train(train)
     return _PQ_CODEBOOK_CACHE[key]
 
 
-def _vector_blocks(
-    df: DataFrame, id_col: str, vec_col: str, m: int, sub: int
-) -> DataFrame:
-    """(id, block, bv): contiguous sub-vector slices, one row per
-    (vector, subspace)."""
+def _vector_blocks(df: DataFrame, id_col: str, sub: int) -> DataFrame:
+    """(id, block, bv): the PQ_M contiguous ``sub``-long slices of
+    vector ``v``, one row per (vector, subspace)."""
     parts = [
         df.select(
             F.col(id_col),
             F.lit(b).alias("block"),
-            F.slice(F.col(vec_col), b * sub + 1, sub).alias("bv"),
+            F.slice(F.col("v"), b * sub + 1, sub).alias("bv"),
         )
-        for b in range(m)
+        for b in range(PQ_M)
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -1176,51 +1174,37 @@ def _vector_blocks(
     return out
 
 
-def pq_train(
-    vectors: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization codebooks: the :func:`_lloyd` kernel over
-    all m contiguous subspaces in one keyed pass (one training run,
-    not m sequential ones). Returns (block, code_id, cvec,
-    n_assigned) — m*k rows, a broadcast table at any corpus size. The
-    one-row dim probe is fine here: PQ training is already an
-    iterative driver-side loop (like k-means itself)."""
-    v = vectors.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-    )
+def pq_train(vectors: DataFrame) -> DataFrame:
+    """Product-quantization codebooks for ``vectors(vec_id, v)``: the
+    :func:`_lloyd` kernel (PQ_K codes, PQ_ITERS rounds) over all PQ_M
+    contiguous subspaces in one keyed pass (one training run, not m
+    sequential ones). Returns (block, code_id,
+    cvec, n_assigned) — m*k rows, a broadcast table at any corpus
+    size. The one-row dim probe is fine here: PQ training is already
+    an iterative loop of eager rounds (like k-means itself)."""
+    v = vectors.select(F.col("vec_id").alias("vid"), "v")
     dim = len(v.select("v").first()["v"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    return _lloyd(_vector_blocks(v, "vid", "v", m, dim // m), k, PQ_ITERS)
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by m={PQ_M}")
+    return _lloyd(_vector_blocks(v, "vid", dim // PQ_M), PQ_K, PQ_ITERS)
 
 
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: DataFrame,
-    sub: int,
-    m: int = PQ_M,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """(vec_id, codes): nearest codeword per subspace — a map over the
-    corpus against the BROADCAST codebook, then an m-row-per-vector
-    regroup. 64 float32 dims (256 B) compress to m=4 5-bit codes
-    (PQ_K=32 -> 20 bits, 2.5 B packed): the ~102x memory reduction
-    that lets a 100 TB embedding corpus be scanned for ADC scoring
-    from RAM."""
-    blocks = _vector_blocks(vectors, id_col, vec_col, m, sub)
-    w = Window.partitionBy(id_col, "block").orderBy("d", "code_id")
+def pq_encode(vectors: DataFrame, codebooks: DataFrame, sub: int) -> DataFrame:
+    """(vec_id, codes): nearest codeword per subspace of
+    ``vectors(vec_id, v)`` — a map over the corpus against the
+    BROADCAST codebook, then an m-row-per-vector regroup. 64 float32
+    dims (256 B) compress to m=4 5-bit codes (PQ_K=32 -> 20 bits,
+    2.5 B packed): the ~102x memory reduction that lets a 100 TB
+    embedding corpus be scanned for ADC scoring from RAM."""
+    blocks = _vector_blocks(vectors, "vec_id", sub)
+    w = Window.partitionBy("vec_id", "block").orderBy("d", "code_id")
     assigned = (
         blocks.join(F.broadcast(codebooks), "block")
         .withColumn("d", _sqdist(F.col("bv"), F.col("cvec")))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
-    return assigned.groupBy(id_col).agg(
+    return assigned.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("block", "code_id"))),
             lambda s: s.getField("code_id"),
@@ -1278,20 +1262,24 @@ def pq_sampled_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_adc_topk(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Shared encode + ADC + window-top-k tail of the PQ searches."""
-    sub = len(
-        codebooks.select("cvec").first()["cvec"]
-    )
-    codes = pq_encode(emb, codebooks, sub)
+def _adc_tables(
+    emb: DataFrame, codebooks: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The one ADC scorer's two tables for the corpus ``emb(vec_id,
+    v)``: ``adc(query_id, block, code_id, dq)``, the distance from
+    each query sub-vector to every codeword of its block — m*k rows
+    per query, a broadcast — as 1e-9-quantized longs, so any sum of
+    them is exact and aggregation-order independent (cross-engine);
+    and ``ncodes(neighbor_id, block, code_id)``, every vector's PQ
+    code exploded per block. Scoring then scans only the codes,
+    never the vectors (DuckDB twin: ``_pq_ctes``)."""
+    sub = len(codebooks.select("cvec").first()["cvec"])
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "v"
     )
-    qblocks = _vector_blocks(queries, "query_id", "v", PQ_M, sub)
-    # per-block distances quantized to 1e-9 longs: the 4-term ADC sum
-    # is then exact and aggregation-order independent (cross-engine)
     adc = (
-        qblocks.join(F.broadcast(codebooks), "block")
+        _vector_blocks(queries, "query_id", sub)
+        .join(F.broadcast(codebooks), "block")
         .select(
             "query_id",
             "block",
@@ -1301,28 +1289,33 @@ def _pq_adc_topk(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
             ).alias("dq"),
         )
     )
-    ncodes = codes.select(
+    ncodes = pq_encode(emb, codebooks, sub).select(
         F.col("vec_id").alias("neighbor_id"),
         F.posexplode("codes").alias("block", "code_id"),
     )
-    scored = (
-        ncodes.join(F.broadcast(adc), ["block", "code_id"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("dq") / F.lit(1e9)).alias("approx_dist"))
+    return adc, ncodes
+
+
+def _adc_dist(pairs: DataFrame) -> DataFrame:
+    """Per (query, neighbor): the summed quantized block distances."""
+    return pairs.groupBy("query_id", "neighbor_id").agg(
+        (F.sum("dq") / F.lit(1e9)).alias("approx_dist")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("approx_dist"), 8).alias("approx_dist"),
+
+
+def _pq_adc_topk(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """Shared encode + ADC + window-top-k tail of the PQ searches."""
+    adc, ncodes = _adc_tables(emb, codebooks)
+    scored = _adc_dist(
+        ncodes.join(F.broadcast(adc), ["block", "code_id"]).filter(
+            F.col("query_id") != F.col("neighbor_id")
         )
+    )
+    return _topk(scored, F.col("approx_dist").asc()).select(
+        "query_id",
+        "neighbor_id",
+        "rank",
+        stable_round(F.col("approx_dist"), 8).alias("approx_dist"),
     )
 
 
@@ -1332,11 +1325,7 @@ def exact_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     objective). Same broadcast-queries / window-top-k shape as
     :func:`cosine_topk`. Not registered: it exists as the recall
     reference for ``pq_recall_at10``."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
+    emb = _corpus_vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -1350,14 +1339,7 @@ def exact_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         _sqdist(F.col("qv"), F.col("bv")).alias("d"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    return _topk(scored, F.col("d").asc()).select("query_id", "neighbor_id")
 
 
 def pq_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1392,75 +1374,41 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic; recall vs exact additionally asserted in tests."""
     emb = _corpus_vectors(spark, sf_dir)
     # ---- IVF side: quantized per-label centroids, cell assignment
-    cents = label_centroids(load_table(spark, sf_dir, "embeddings"))
-    scored_cells = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "cell", cosine(F.col("v"), F.col("cvec")).alias("cs")
+    cells = _ranked_cells(
+        emb, label_centroids(load_table(spark, sf_dir, "embeddings"))
     )
-    w_cell = Window.partitionBy("vec_id").orderBy(F.col("cs").desc(), "cell")
-    ranked_cells = scored_cells.withColumn("cr", F.row_number().over(w_cell))
-    index = ranked_cells.filter(F.col("cr") == 1).select(
+    index = cells.filter(F.col("cr") == 1).select(
         F.col("vec_id").alias("neighbor_id"), "cell"
     )
-    probes = ranked_cells.filter(
+    probes = cells.filter(
         (F.col("cr") <= N_PROBE) & (F.col("vec_id") < N_QUERIES)
     ).select(F.col("vec_id").alias("query_id"), "cell")
-    # ---- PQ side: codebooks + codes for the whole corpus
-    codebooks = _cached_codebooks(spark, sf_dir, emb)
-    sub = len(codebooks.select("cvec").first()["cvec"])
-    codes = pq_encode(emb, codebooks, sub)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    qblocks = _vector_blocks(queries, "query_id", "v", PQ_M, sub)
-    adc = qblocks.join(F.broadcast(codebooks), "block").select(
-        "query_id", "block", "code_id",
-        F.floor(
-            _sqdist(F.col("bv"), F.col("cvec")) * 1e9 + F.lit(0.5)
-        ).alias("dq"),
-    )
+    # ---- PQ side: codebooks, codes and the ADC table
+    adc, ncodes = _adc_tables(emb, _cached_codebooks(spark, sf_dir, emb))
     # ---- candidates = IVF-pruned pairs; score from codes only
     cand = probes.join(index, "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     ).select("query_id", "neighbor_id").distinct()
-    ncodes = codes.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.posexplode("codes").alias("block", "code_id"),
+    adc_scored = _adc_dist(
+        cand.join(ncodes, "neighbor_id").join(
+            F.broadcast(adc), ["query_id", "block", "code_id"]
+        )
     )
-    adc_scored = (
-        cand.join(ncodes, "neighbor_id")
-        .join(F.broadcast(adc), ["query_id", "block", "code_id"])
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("dq") / F.lit(1e9)).alias("approx_dist"))
-    )
-    w_sl = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        adc_scored.withColumn("sr", F.row_number().over(w_sl))
-        .filter(F.col("sr") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = _topk(
+        adc_scored, F.col("approx_dist").asc(), IVFPQ_SHORTLIST
+    ).select("query_id", "neighbor_id")
     # ---- exact cosine re-rank of the shortlist only
-    qv = queries.select("query_id", F.col("v").alias("qv"))
-    bv = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("bv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
+    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    return (
+    bv = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("bv"))
+    return _cosine_ranked(
         shortlist.join(qv, "query_id")
         .join(bv, "neighbor_id")
         .select(
             "query_id",
             "neighbor_id",
             cosine(F.col("qv"), F.col("bv")).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
         )
     )
 
@@ -1514,67 +1462,18 @@ def _pq_ctes(sample_mod_sql: str | None = None) -> str:
     return ",\n".join(ctes)
 
 
-_PQ_TOPK_SELECT = f"""
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor(approx_dist * 100000000.0 + 0.5) / 100000000.0 AS approx_dist
-FROM (
-    SELECT query_id, neighbor_id, approx_dist,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY approx_dist ASC, neighbor_id) AS rank
-    FROM pq_scored)
-WHERE rank <= {TOP_K}
-"""
-
-PQ_TOPK_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes()},
-pq_scored AS (
+#: The one ``pq_scored`` CTE: ADC distance of every (query, other
+#: vector) pair, summed from the quantized per-block table.
+_SQL_PQ_SCORED = """pq_scored AS (
     SELECT a.query_id, n.neighbor_id,
            sum(a.dq) / 1000000000.0 AS approx_dist
     FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
     WHERE a.query_id <> n.neighbor_id
     GROUP BY a.query_id, n.neighbor_id
-)
-{_PQ_TOPK_SELECT}
-"""
+)"""
 
-IVFPQ_TOPK_ORACLE = f"""WITH {_IVF_INDEX_CTES},
-{_pq_ctes()},
-cand AS (
-    SELECT DISTINCT p.query_id, i.neighbor_id
-    FROM probes p JOIN idx i USING (cell)
-    WHERE p.query_id <> i.neighbor_id
-),
-adc_scored AS (
-    SELECT c.query_id, c.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM cand c
-    JOIN ncodes n ON n.neighbor_id = c.neighbor_id
-    JOIN adc a ON a.query_id = c.query_id AND a.block = n.block
-              AND a.code_id = n.code_id
-    GROUP BY c.query_id, c.neighbor_id
-),
-shortlist AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_dist ASC, neighbor_id) AS sr
-        FROM adc_scored)
-    WHERE sr <= {IVFPQ_SHORTLIST}
-),
-rr AS (
-    SELECT s.query_id, s.neighbor_id,
-           list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
-    FROM shortlist s
-    JOIN vn q ON q.vec_id = s.query_id
-    JOIN vn b ON b.vec_id = s.neighbor_id
-)
-{_SQL_ANN_TOPK_SELECT.replace("FROM ann_scored", "FROM rr")}
-"""
-
-#: Exact-L2 reference CTEs (exact_scored/exact_topk names match what
-#: ``_SQL_RECALL_SELECT`` expects) — the PQ recall ground truth.
-_SQL_EXACT_L2_TOPK = f"""
-exact_scored AS (
+#: Exact-L2 reference (``exact_l2_topk``) — the PQ recall ground truth.
+_SQL_EXACT_L2 = f"""exact_scored AS (
     SELECT query_id, neighbor_id, list_dot_product(df, df) AS d
     FROM (
         SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -1582,79 +1481,38 @@ exact_scored AS (
                               x -> q.e[x] - b.e[x]) AS df
         FROM vn q JOIN vn b
           ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id)
-),
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY d ASC, neighbor_id) AS rank
-        FROM exact_scored)
-    WHERE rank <= {TOP_K}
-)
-"""
-
-PQ_RECALL_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes()},
-pq_scored AS (
-    SELECT a.query_id, n.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-    WHERE a.query_id <> n.neighbor_id
-    GROUP BY a.query_id, n.neighbor_id
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_dist ASC, neighbor_id)
-                 AS rank
-        FROM pq_scored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_L2_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
+)"""
 
 #: sampling modulus computed in SQL from the corpus count — the twin
 #: adapts to any scale factor exactly like the Spark side's
 #: ``emb.count() // PQ_TRAIN_TARGET``.
 _PQ_MOD_SQL = f"(SELECT GREATEST(1, count(*) // {PQ_TRAIN_TARGET}) FROM vn)"
 
-PQ_TOPK_SAMPLED_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes(_PQ_MOD_SQL)},
-pq_scored AS (
-    SELECT a.query_id, n.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-    WHERE a.query_id <> n.neighbor_id
-    GROUP BY a.query_id, n.neighbor_id
-)
-{_PQ_TOPK_SELECT}
-"""
 
-PQ_SAMPLED_RECALL_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes(_PQ_MOD_SQL)},
-pq_scored AS (
-    SELECT a.query_id, n.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-    WHERE a.query_id <> n.neighbor_id
-    GROUP BY a.query_id, n.neighbor_id
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_dist ASC, neighbor_id)
-                 AS rank
-        FROM pq_scored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_L2_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
+def _pq_topk_sql(sample_mod_sql: str | None = None) -> str:
+    return f"""WITH {_SQL_VN},
+{_pq_ctes(sample_mod_sql)},
+{_SQL_PQ_SCORED}
+{_sql_topk_select("pq_scored", "approx_dist ASC", _SQL_APPROX_DIST)}"""
 
-IVFPQ_RECALL_ORACLE = f"""WITH {_IVF_INDEX_CTES},
+
+def _pq_recall_sql(sample_mod_sql: str | None = None) -> str:
+    return f"""WITH {_SQL_VN},
+{_pq_ctes(sample_mod_sql)},
+{_SQL_PQ_SCORED},
+{_SQL_EXACT_L2},
+{_sql_recall("pq_scored", "approx_dist ASC", "exact_scored", "d ASC")}"""
+
+
+PQ_TOPK_ORACLE = _pq_topk_sql()
+PQ_TOPK_SAMPLED_ORACLE = _pq_topk_sql(_PQ_MOD_SQL)
+PQ_RECALL_ORACLE = _pq_recall_sql()
+PQ_SAMPLED_RECALL_ORACLE = _pq_recall_sql(_PQ_MOD_SQL)
+
+#: The one IVF-PQ chain: IVF-pruned candidate pairs, their ADC
+#: distance, the IVFPQ_SHORTLIST closest per query, and the exact
+#: cosine of the shortlist (``ann_scored``).
+_IVFPQ_CTES = f"""{_IVF_INDEX_CTES},
 {_pq_ctes()},
 cand AS (
     SELECT DISTINCT p.query_id, i.neighbor_id
@@ -1670,23 +1528,21 @@ adc_scored AS (
               AND a.code_id = n.code_id
     GROUP BY c.query_id, c.neighbor_id
 ),
-shortlist AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_dist ASC, neighbor_id) AS sr
-        FROM adc_scored)
-    WHERE sr <= {IVFPQ_SHORTLIST}
-),
+shortlist AS ({_sql_topk("adc_scored", "approx_dist ASC", IVFPQ_SHORTLIST)}),
 ann_scored AS (
     SELECT s.query_id, s.neighbor_id,
            list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
     FROM shortlist s
     JOIN vn q ON q.vec_id = s.query_id
     JOIN vn b ON b.vec_id = s.neighbor_id
-),
-{_SQL_ANN_RECALL_TAIL}
-"""
+)"""
+
+IVFPQ_TOPK_ORACLE = f"""WITH {_IVFPQ_CTES}
+{_sql_topk_select("ann_scored", "score DESC", _SQL_SCORE)}"""
+
+IVFPQ_RECALL_ORACLE = f"""WITH {_IVFPQ_CTES},
+{_SQL_EXACT},
+{_sql_recall("ann_scored", "score DESC")}"""
 
 
 # ------------------------------- binary (sign-bit) quantization ANN
@@ -1710,6 +1566,47 @@ def _sign_sig(col_name: str) -> Column:
     )
 
 
+def _xor_hamming(a: str, b: str) -> Column:
+    """One-word Hamming: POPCNT of the XOR."""
+    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
+
+
+class _SigKind(NamedTuple):
+    """What the binary queries vary by signature width: the signature
+    expression over the embedding column, its Hamming distance, the MIH
+    band count, and the (Spark SQL) 64-bit word of signature ``x``
+    that band ``band``'s 8-bit key is cut from."""
+
+    sig: Callable[[str], Column]
+    hamming: Callable[[str, str], Column]
+    n_bands: int
+    word: str
+
+
+def _hamming_topk(spark: SparkSession, sf_dir: str, kind: _SigKind) -> DataFrame:
+    """Brute-force binary ANN: the bounded query sample's signatures
+    broadcast against every corpus signature, ranked by exact Hamming
+    (ties on neighbor_id). Integer-only end to end, so the oracle is
+    exact."""
+    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
+
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    sigs = emb.select("vec_id", kind.sig("embedding").alias("sig"))
+    queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig")
+    )
+    scored = sigs.join(
+        F.broadcast(queries), F.col("query_id") != F.col("vec_id")
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        kind.hamming("qsig", "sig").cast("int").alias("hamming"),
+    )
+    return _topk(scored, F.col("hamming")).select(
+        "query_id", "neighbor_id", "rank", "hamming"
+    )
+
+
 def binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-quantized ANN (r10): sign-bit signatures compress each
     64-dim float vector 32× into one BIGINT; neighbor ranking is
@@ -1720,28 +1617,7 @@ def binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded query side broadcasts, the corpus never shuffles, and
     each candidate costs one XOR + POPCNT. Ties (Hamming is coarse:
     0..64) break on neighbor_id — deterministic cross-engine."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
-    queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig")
-    )
-    scored = sigs.join(
-        F.broadcast(queries), F.col("query_id") != F.col("vec_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.bit_count(F.col("qsig").bitwiseXOR(F.col("sig")))
-        .cast("int")
-        .alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    return _hamming_topk(spark, sf_dir, _ONE_WORD)
 
 
 def binary_hamming_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1766,6 +1642,45 @@ MIH_BANDS = 8
 MIH_BITS = 8
 
 
+def _mih_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: _SigKind,
+    probes: tuple[int, ...] = (0,),
+) -> DataFrame:
+    """Multi-index Hamming: every signature cut into ``kind.n_bands``
+    8-bit band keys (shift + mask: arithmetic vs logical shift is
+    irrelevant under the mask, so both engines agree), candidates from
+    the (band, key) equi-join of :func:`_band_candidates` (query keys
+    probed at the exact key, or XOR every ``probes`` flip too), then
+    exact Hamming re-ranks candidates only. Queries with fewer
+    candidates than TOP_K return fewer rows (both engines replay
+    identically)."""
+    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
+
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    sigs = emb.select("vec_id", kind.sig("embedding").alias("x"))
+    bands = sigs.select(
+        "vec_id",
+        "x",
+        F.explode(F.sequence(F.lit(0), F.lit(kind.n_bands - 1))).alias("band"),
+    ).withColumn(
+        "key",
+        F.expr(
+            f"shiftright({kind.word}, (band % {MIH_BANDS}) * {MIH_BITS})"
+            f" & {(1 << MIH_BITS) - 1}"
+        ),
+    )
+    scored = _band_candidates(bands, probes).select(
+        "query_id",
+        "neighbor_id",
+        kind.hamming("qx", "nx").cast("int").alias("hamming"),
+    )
+    return _topk(scored, F.col("hamming")).select(
+        "query_id", "neighbor_id", "rank", "hamming"
+    )
+
+
 def binary_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE path for the binary family (r10): multi-index
     Hamming. Candidates come from a (band, 8-bit key) EQUI-join —
@@ -1776,51 +1691,8 @@ def binary_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructed close pairs — the corpus' random signs sit at
     expected distance 32 — plus a full numpy candidate/rank replay);
     farther neighbors appear only if they share a band, the standard
-    MIH recall trade-off the recall audit below measures. Queries
-    with fewer candidates than TOP_K return fewer rows (both engines
-    replay identically)."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
-    # band keys via shiftright + MIH_BITS-wide (8-bit) mask
-    # (arithmetic vs logical shift is irrelevant under the mask, so
-    # both engines agree)
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(MIH_BANDS - 1))).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(f"shiftright(sig, band * {MIH_BITS}) & {(1 << MIH_BITS) - 1}"),
-    )
-    qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("sig").alias("qsig"),
-        "band",
-        "bkey",
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.bit_count(F.col("qsig").bitwiseXOR(F.col("sig")))
-        .cast("int")
-        .alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    MIH recall trade-off the recall audit below measures."""
+    return _mih_topk(spark, sf_dir, _ONE_WORD)
 
 
 def binary_mih_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1846,91 +1718,63 @@ _SQL_SIGS_CTE = """sigs AS (
     FROM embeddings
 )"""
 
-_SQL_SIGN_SIGS = f"""
-{_SQL_SIGS_CTE},
-hscored AS (
+def _sql_hamming_scored(hamming: str) -> str:
+    """``hscored``: brute-force Hamming of every query-sample signature
+    against every other signature of ``sigs`` (``hamming`` is the
+    distance over aliases q and b)."""
+    return f"""hscored AS (
     SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-           bit_count(xor(q.sig, b.sig)) AS hamming
+           {hamming} AS hamming
     FROM sigs q JOIN sigs b
       ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id
 )"""
 
-BINARY_HAMMING_TOPK_ORACLE = f"""
-WITH {_SQL_SIGN_SIGS.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM hscored)
-WHERE rank <= {TOP_K}
-"""
 
-BINARY_HAMMING_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
-{_SQL_SIGN_SIGS.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM hscored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-#: MIH candidate generation + re-rank, replayed exactly: band keys by
-#: shiftright+mask (convention-proof under the MIH_BITS-wide 8-bit
-#: mask), equality join on (band, bkey), distinct pairs,
-#: exact-Hamming rank.
-_SQL_MIH = f"""
-bands AS (
-    SELECT vec_id, sig, b.band,
-           (sig >> (b.band * {MIH_BITS})) & {(1 << MIH_BITS) - 1} AS bkey
-    FROM sigs CROSS JOIN
-         (SELECT unnest(generate_series(0, {MIH_BANDS - 1})) AS band) b
-),
-cand AS (
-    SELECT DISTINCT q.vec_id AS query_id, q.sig AS qsig,
-                    n.vec_id AS neighbor_id, n.sig AS nsig
-    FROM bands q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> n.vec_id
-),
+def _sql_mih_ctes(
+    hamming: str, word: str, n_bands: int, probes: tuple[int, ...]
+) -> str:
+    """MIH replay of :func:`_mih_topk`: the band-bucket candidates of
+    :func:`_sql_band_ctes`, then ``mscored``, their exact Hamming."""
+    return f"""{_sql_band_ctes(word, n_bands, MIH_BITS, probes)},
 mscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qsig, nsig)) AS hamming
-    FROM cand
+    SELECT c.query_id, c.neighbor_id, {hamming} AS hamming
+    FROM cand c
+    JOIN sigs q ON q.vec_id = c.query_id
+    JOIN sigs b ON b.vec_id = c.neighbor_id
 )"""
 
-BINARY_MIH_TOPK_ORACLE = f"""
-WITH {_SQL_SIGS_CTE},
-{_SQL_MIH.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mscored)
-WHERE rank <= {TOP_K}
-"""
 
-BINARY_MIH_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
+_SQL_HAMMING = "CAST(hamming AS INT) AS hamming"
+#: one-word Hamming over aliases q and b.
+_SQL_XOR_HAMMING = "bit_count(xor(q.sig, b.sig))"
+
+BINARY_HAMMING_TOPK_ORACLE = f"""WITH {_SQL_SIGS_CTE},
+{_sql_hamming_scored(_SQL_XOR_HAMMING)}
+{_sql_topk_select("hscored", "hamming", _SQL_HAMMING)}"""
+
+BINARY_HAMMING_RECALL_ORACLE = f"""WITH {_SQL_VN},
+{_SQL_EXACT},
 {_SQL_SIGS_CTE},
-{_SQL_MIH.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mscored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
+{_sql_hamming_scored(_SQL_XOR_HAMMING)},
+{_sql_recall("hscored", "hamming")}"""
+
+
+def _sql_mih_topk(probes: tuple[int, ...]) -> str:
+    return f"""WITH {_SQL_SIGS_CTE},
+{_sql_mih_ctes(_SQL_XOR_HAMMING, "sig", MIH_BANDS, probes)}
+{_sql_topk_select("mscored", "hamming", _SQL_HAMMING)}"""
+
+
+def _sql_mih_recall(probes: tuple[int, ...]) -> str:
+    return f"""WITH {_SQL_VN},
+{_SQL_EXACT},
+{_SQL_SIGS_CTE},
+{_sql_mih_ctes(_SQL_XOR_HAMMING, "sig", MIH_BANDS, probes)},
+{_sql_recall("mscored", "hamming")}"""
+
+
+BINARY_MIH_TOPK_ORACLE = _sql_mih_topk((0,))
+BINARY_MIH_RECALL_ORACLE = _sql_mih_recall((0,))
 
 
 # ---------------- multi-word binary signatures (r11): past 64 dims
@@ -1992,6 +1836,16 @@ def _mw_hamming(a: str, b: str) -> Column:
     )
 
 
+#: The one-word and multi-word signature kinds of the binary family.
+_ONE_WORD = _SigKind(_sign_sig, _xor_hamming, MIH_BANDS, "x")
+_MULTI_WORD = _SigKind(
+    _mw_sig,
+    _mw_hamming,
+    MW_TOTAL_BANDS,
+    f"element_at(x, CAST(band DIV {MIH_BANDS} AS INT) + 1)",
+)
+
+
 def binary_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force multi-word binary ANN (r11): generalizes
     ``binary_hamming_topk`` past 64 dims — signatures are
@@ -2000,26 +1854,7 @@ def binary_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature build is a map-side shrink to 8 bytes/word BEFORE
     anything moves, the bounded query side broadcasts, ties break on
     neighbor_id. Integer-only, so the oracle is exact."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
-    queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig")
-    )
-    scored = sigs.join(
-        F.broadcast(queries), F.col("query_id") != F.col("vec_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _mw_hamming("qsig", "sig").cast("int").alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    return _hamming_topk(spark, sf_dir, _MULTI_WORD)
 
 
 def binary_multiword_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2032,51 +1867,7 @@ def binary_multiword_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BNLJ at any size; random signs sit at expected distance 96, so
     corpus candidates are band-collision-driven (~n*24/256 per
     query), which the recall audit below prices."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
-    # (word, byte) band key: arithmetic-vs-logical shift is
-    # irrelevant under the 8-bit mask, so both engines agree
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(MW_TOTAL_BANDS - 1))
-        ).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(
-            f"shiftright(element_at(sig, CAST(band DIV {MIH_BANDS} AS INT)"
-            f" + 1), (band % {MIH_BANDS}) * {MIH_BITS})"
-            f" & {(1 << MIH_BITS) - 1}"
-        ),
-    )
-    qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("sig").alias("qsig"),
-        "band",
-        "bkey",
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _mw_hamming("qsig", "sig").cast("int").alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    return _mih_topk(spark, sf_dir, _MULTI_WORD)
 
 
 def binary_multiword_mih_recall_at10(
@@ -2111,58 +1902,7 @@ def binary_mih_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus side is untouched: probes explode on the BOUNDED query
     side only, and candidates still come from the bucketed
     (band, key) equi-join."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(MIH_BANDS - 1))).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(f"shiftright(sig, band * {MIH_BITS}) & {(1 << MIH_BITS) - 1}"),
-    )
-    qb = (
-        bands.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("sig").alias("qsig"),
-            "band",
-            "bkey",
-        )
-        .withColumn(
-            "flip",
-            F.explode(F.array(*[F.lit(f) for f in MIH_PROBE_FLIPS])),
-        )
-        .select(
-            "query_id",
-            "qsig",
-            "band",
-            F.col("bkey").bitwiseXOR(F.col("flip")).alias("bkey"),
-        )
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.bit_count(F.col("qsig").bitwiseXOR(F.col("sig")))
-        .cast("int")
-        .alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    return _mih_topk(spark, sf_dir, _ONE_WORD, MIH_PROBE_FLIPS)
 
 
 def binary_mih_multiprobe_recall_at10(
@@ -2193,62 +1933,7 @@ def binary_multiword_mih_multiprobe_topk(
     Probes explode only on the BOUNDED query side (9x); candidates
     still come from the bucketed (band, key) EQUI-join, corpus side
     untouched — no BNLJ at any scale."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(MW_TOTAL_BANDS - 1))
-        ).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(
-            f"shiftright(element_at(sig, CAST(band DIV {MIH_BANDS} AS INT)"
-            f" + 1), (band % {MIH_BANDS}) * {MIH_BITS})"
-            f" & {(1 << MIH_BITS) - 1}"
-        ),
-    )
-    qb = (
-        bands.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("sig").alias("qsig"),
-            "band",
-            "bkey",
-        )
-        .withColumn(
-            "flip",
-            F.explode(F.array(*[F.lit(f) for f in MIH_PROBE_FLIPS])),
-        )
-        .select(
-            "query_id",
-            "qsig",
-            "band",
-            F.col("bkey").bitwiseXOR(F.col("flip")).alias("bkey"),
-        )
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _mw_hamming("qsig", "sig").cast("int").alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    return _mih_topk(spark, sf_dir, _MULTI_WORD, MIH_PROBE_FLIPS)
 
 
 def binary_multiword_mih_multiprobe_recall_at10(
@@ -2266,63 +1951,6 @@ def binary_multiword_mih_multiprobe_recall_at10(
         binary_multiword_topk(spark, sf_dir),
         binary_multiword_mih_multiprobe_topk(spark, sf_dir),
     )
-
-
-_SQL_MIH_FLIPS = ", ".join(str(f) for f in MIH_PROBE_FLIPS)
-
-#: Multiprobe replay: the query side's band keys expand by XOR with
-#: the 9 probe flips, the corpus side is the plain band table.
-_SQL_MIH_MP = f"""
-bands AS (
-    SELECT vec_id, sig, b.band,
-           (sig >> (b.band * {MIH_BITS})) & {(1 << MIH_BITS) - 1} AS bkey
-    FROM sigs CROSS JOIN
-         (SELECT unnest(generate_series(0, {MIH_BANDS - 1})) AS band) b
-),
-qprobes AS (
-    SELECT vec_id, sig, band, xor(bkey, f.flip) AS bkey
-    FROM bands CROSS JOIN (SELECT unnest([{_SQL_MIH_FLIPS}]) AS flip) f
-    WHERE vec_id < {N_QUERIES}
-),
-mpcand AS (
-    SELECT DISTINCT q.vec_id AS query_id, q.sig AS qsig,
-                    n.vec_id AS neighbor_id, n.sig AS nsig
-    FROM qprobes q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id <> n.vec_id
-),
-mpscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qsig, nsig)) AS hamming
-    FROM mpcand
-)"""
-
-BINARY_MIH_MULTIPROBE_TOPK_ORACLE = f"""
-WITH {_SQL_SIGS_CTE},
-{_SQL_MIH_MP.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mpscored)
-WHERE rank <= {TOP_K}
-"""
-
-BINARY_MIH_MULTIPROBE_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
-{_SQL_SIGS_CTE},
-{_SQL_MIH_MP.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mpscored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
 
 
 #: Asymmetric-distance quantization scale: query components quantize
@@ -2372,13 +2000,8 @@ def binary_asymmetric_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " 0L, (acc, x) -> acc + x)"
         ).alias("asym_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("asym_score").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "asym_score")
+    return _topk(scored, F.col("asym_score").desc()).select(
+        "query_id", "neighbor_id", "rank", "asym_score"
     )
 
 
@@ -2414,32 +2037,13 @@ ascored AS (
     FROM ql JOIN sigs s ON ql.vec_id <> s.vec_id
 )"""
 
-BINARY_ASYMMETRIC_TOPK_ORACLE = f"""
-WITH {_SQL_ASYM.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, asym_score
-FROM (SELECT query_id, neighbor_id, asym_score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY asym_score DESC, neighbor_id)
-               AS rank
-      FROM ascored)
-WHERE rank <= {TOP_K}
-"""
+BINARY_ASYMMETRIC_TOPK_ORACLE = f"""WITH {_SQL_ASYM.strip()}
+{_sql_topk_select("ascored", "asym_score DESC", "asym_score")}"""
 
-BINARY_ASYMMETRIC_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
+BINARY_ASYMMETRIC_RECALL_ORACLE = f"""WITH {_SQL_VN},
+{_SQL_EXACT},
 {_SQL_ASYM.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY asym_score DESC, neighbor_id)
-                 AS rank
-        FROM ascored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
+{_sql_recall("ascored", "asym_score DESC")}"""
 
 
 def _sql_mw_word(off: int) -> str:
@@ -2459,7 +2063,7 @@ def _sql_mw_word(off: int) -> str:
                          ELSE 0::BIGINT END), 'sum') AS BIGINT)"""
 
 
-_SQL_MW_SIGS_CTE = f"""msigs AS (
+_SQL_MW_SIGS_CTE = f"""sigs AS (
     SELECT vec_id,
            {_sql_mw_word(MW_OFFSETS[0])} AS w0,
            {_sql_mw_word(MW_OFFSETS[1])} AS w1,
@@ -2474,152 +2078,38 @@ _SQL_MW_HAMMING = (
     " + bit_count(xor(q.w2, b.w2))::INT"
 )
 
-_SQL_MW_BRUTE = f"""
-{_SQL_MW_SIGS_CTE},
-mwscored AS (
-    SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-           {_SQL_MW_HAMMING} AS hamming
-    FROM msigs q JOIN msigs b
-      ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id
-)"""
+#: (word, byte) band addressing: band b's key is cut from word b // 8.
+_SQL_MW_WORD = f"""CASE band // {MIH_BANDS} WHEN 0 THEN w0
+                  WHEN 1 THEN w1 ELSE w2 END"""
 
-BINARY_MULTIWORD_TOPK_ORACLE = f"""
-WITH {_SQL_MW_BRUTE.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mwscored)
-WHERE rank <= {TOP_K}
-"""
+BINARY_MULTIWORD_TOPK_ORACLE = f"""WITH {_SQL_MW_SIGS_CTE},
+{_sql_hamming_scored(_SQL_MW_HAMMING)}
+{_sql_topk_select("hscored", "hamming", _SQL_HAMMING)}"""
 
-#: (word, byte) band keys replayed exactly (band b → word b // 8,
-#: byte b % 8; shift convention irrelevant under the 8-bit mask).
-_SQL_MW_MIH = f"""
-mbands AS (
-    SELECT vec_id, w0, w1, w2, b.band,
-           ((CASE b.band // {MIH_BANDS} WHEN 0 THEN w0
-                  WHEN 1 THEN w1 ELSE w2 END)
-            >> ((b.band % {MIH_BANDS}) * {MIH_BITS}))
-           & {(1 << MIH_BITS) - 1} AS bkey
-    FROM msigs CROSS JOIN
-         (SELECT unnest(generate_series(0, {MW_TOTAL_BANDS - 1})) AS band) b
-),
-mcand AS (
-    SELECT DISTINCT q.vec_id AS query_id,
-                    q.w0 AS qw0, q.w1 AS qw1, q.w2 AS qw2,
-                    n.vec_id AS neighbor_id,
-                    n.w0 AS nw0, n.w1 AS nw1, n.w2 AS nw2
-    FROM mbands q JOIN mbands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> n.vec_id
-),
-mwmihscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qw0, nw0))::INT + bit_count(xor(qw1, nw1))::INT
-           + bit_count(xor(qw2, nw2))::INT AS hamming
-    FROM mcand
-)"""
 
-BINARY_MULTIWORD_MIH_TOPK_ORACLE = f"""
-WITH {_SQL_MW_SIGS_CTE.strip()},
-{_SQL_MW_MIH.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mwmihscored)
-WHERE rank <= {TOP_K}
-"""
+def _sql_mw_mih_topk(probes: tuple[int, ...]) -> str:
+    return f"""WITH {_SQL_MW_SIGS_CTE},
+{_sql_mih_ctes(_SQL_MW_HAMMING, _SQL_MW_WORD, MW_TOTAL_BANDS, probes)}
+{_sql_topk_select("mscored", "hamming", _SQL_HAMMING)}"""
 
-#: Multiprobe composition (r12): the multi-word band table expands
-#: on the query side by XOR with the 9 probe flips — same mbands
-#: corpus side, same equi-join.
-_SQL_MW_MIH_MP = f"""
-mqprobes AS (
-    SELECT vec_id, w0, w1, w2, band, xor(bkey, f.flip) AS bkey
-    FROM mbands CROSS JOIN
-         (SELECT unnest([{_SQL_MIH_FLIPS}]) AS flip) f
-    WHERE vec_id < {N_QUERIES}
-),
-mmpcand AS (
-    SELECT DISTINCT q.vec_id AS query_id,
-                    q.w0 AS qw0, q.w1 AS qw1, q.w2 AS qw2,
-                    n.vec_id AS neighbor_id,
-                    n.w0 AS nw0, n.w1 AS nw1, n.w2 AS nw2
-    FROM mqprobes q JOIN mbands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id <> n.vec_id
-),
-mmpscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qw0, nw0))::INT + bit_count(xor(qw1, nw1))::INT
-           + bit_count(xor(qw2, nw2))::INT AS hamming
-    FROM mmpcand
-)"""
 
-#: mbands comes from _SQL_MW_MIH; only its band CTE is reused (the
-#: mcand/mwmihscored tails are dead weight the optimizer prunes —
-#: unreferenced CTEs are not executed by DuckDB).
-BINARY_MULTIWORD_MIH_MULTIPROBE_TOPK_ORACLE = f"""
-WITH {_SQL_MW_SIGS_CTE.strip()},
-{_SQL_MW_MIH.strip()},
-{_SQL_MW_MIH_MP.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mmpscored)
-WHERE rank <= {TOP_K}
-"""
+def _sql_mw_mih_recall(probes: tuple[int, ...]) -> str:
+    """Recall twin: exact side = brute multi-word top-k, ann side = MIH
+    multi-word top-k, joined per query like ``_recall_vs_exact``."""
+    return f"""WITH {_SQL_MW_SIGS_CTE},
+{_sql_hamming_scored(_SQL_MW_HAMMING)},
+{_sql_mih_ctes(_SQL_MW_HAMMING, _SQL_MW_WORD, MW_TOTAL_BANDS, probes)},
+{_sql_recall("mscored", "hamming", "hscored", "hamming")}"""
 
-BINARY_MULTIWORD_MIH_MULTIPROBE_RECALL_ORACLE = f"""
-WITH {_SQL_MW_BRUTE.strip()},
-{_SQL_MW_MIH.strip()},
-{_SQL_MW_MIH_MP.strip()},
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mwscored)
-    WHERE rank <= {TOP_K}
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mmpscored)
-    WHERE rank <= {TOP_K}
+
+BINARY_MULTIWORD_MIH_TOPK_ORACLE = _sql_mw_mih_topk((0,))
+BINARY_MULTIWORD_MIH_RECALL_ORACLE = _sql_mw_mih_recall((0,))
+BINARY_MIH_MULTIPROBE_TOPK_ORACLE = _sql_mih_topk(MIH_PROBE_FLIPS)
+BINARY_MIH_MULTIPROBE_RECALL_ORACLE = _sql_mih_recall(MIH_PROBE_FLIPS)
+BINARY_MULTIWORD_MIH_MULTIPROBE_TOPK_ORACLE = _sql_mw_mih_topk(MIH_PROBE_FLIPS)
+BINARY_MULTIWORD_MIH_MULTIPROBE_RECALL_ORACLE = _sql_mw_mih_recall(
+    MIH_PROBE_FLIPS
 )
-{_SQL_RECALL_SELECT}
-"""
-
-#: Recall twin: exact side = brute multi-word top-k, ann side = MIH
-#: multi-word top-k, joined per query like ``_recall_vs_exact``.
-BINARY_MULTIWORD_MIH_RECALL_ORACLE = f"""
-WITH {_SQL_MW_BRUTE.strip()},
-{_SQL_MW_MIH.strip()},
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mwscored)
-    WHERE rank <= {TOP_K}
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mwmihscored)
-    WHERE rank <= {TOP_K}
-)
-{_SQL_RECALL_SELECT}
-"""
 
 
 def _register() -> None:

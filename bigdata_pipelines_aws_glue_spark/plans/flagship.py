@@ -197,6 +197,31 @@ OUTPUT_CONTRACT = (
 )
 
 
+def enrich(
+    transactions: DataFrame,
+    rates: DataFrame,
+    categories: DataFrame,
+    target_currency: str = TARGET_CURRENCY,
+) -> DataFrame:
+    """The one enrichment step (glue_job.py:85-153): currency
+    conversion, category left join, calendar columns, and the contract
+    projection with ``amount_usd`` named after the target currency.
+    Batch (``flagship_query``), CSV (``reference_pipeline.transform``)
+    and streaming (``streaming.jobs.flagship_stream``) all run it.
+
+    The categories side grows with the product catalogue (``part`` in
+    the corpus), so it takes the size-gated ``maybe_broadcast``: hinted
+    at tested scales where the estimate fits the threshold, left to
+    planner+AQE at 100 TB where a forced build would OOM executors."""
+    converted = convert_currency(transactions, rates, target_currency)
+    enriched = converted.join(
+        maybe_broadcast(categories), on="product_id", how="left"
+    )
+    amount_col = f"amount_{target_currency.lower()}"
+    contract = [amount_col if c == "amount_usd" else c for c in OUTPUT_CONTRACT]
+    return derive_time_columns(enriched).select(*contract)
+
+
 def flagship_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full reference pipeline (SURVEY.md §3.2) over the corpus.
 
@@ -205,18 +230,11 @@ def flagship_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the local single-row-group scan costs more than it saves on a cold
     run — and at real scale the scan arrives in many partitions anyway.
     """
-    transactions = synth_transactions(spark, sf_dir)
-    rates = synth_currency_rates(spark, sf_dir)
-    categories = synth_product_categories(spark, sf_dir)
-
-    converted = convert_currency(transactions, rates)
-    # categories derives from `part`, which scales with the corpus —
-    # size-gated hint so a 100 TB run falls back to planner+AQE.
-    enriched = converted.join(
-        maybe_broadcast(categories), on="product_id", how="left"
+    return enrich(
+        synth_transactions(spark, sf_dir),
+        synth_currency_rates(spark, sf_dir),
+        synth_product_categories(spark, sf_dir),
     )
-    final = derive_time_columns(enriched)
-    return final.select(*OUTPUT_CONTRACT)
 
 
 #: DuckDB oracle — must mirror flagship_query exactly (names + values).

@@ -32,10 +32,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+# ``transform`` is a module-level name that ``run_pipeline`` looks up
+# at call time, so a caller can wrap it on this module (the traced
+# benchmark pass does).
 from bigdata_pipelines_aws_glue_spark.plans.flagship import (
-    OUTPUT_CONTRACT,
-    convert_currency,
-    derive_time_columns,
+    enrich as transform,
 )
 from bigdata_pipelines_aws_glue_spark.sources.readers import read_csv
 from bigdata_pipelines_aws_glue_spark.sources.writers import (
@@ -88,23 +89,6 @@ def read_inputs(
         spark, cfg.product_categories_path, schema=PRODUCT_CATEGORIES_SCHEMA
     )
     return transactions, rates, categories
-
-
-def transform(
-    transactions: DataFrame,
-    rates: DataFrame,
-    categories: DataFrame,
-    target_currency: str = "USD",
-) -> DataFrame:
-    """The full glue_job.py:85-153 transform with intended semantics
-    (the reference's UDF crashes at runtime for non-target currencies,
-    SURVEY.md header bug #1 — this is the working form)."""
-    converted = convert_currency(transactions, rates, target_currency)
-    enriched = converted.join(F.broadcast(categories), on="product_id", how="left")
-    final = derive_time_columns(enriched)
-    amount_col = f"amount_{target_currency.lower()}"
-    contract = [c if c != "amount_usd" else amount_col for c in OUTPUT_CONTRACT]
-    return final.select(*contract)
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:

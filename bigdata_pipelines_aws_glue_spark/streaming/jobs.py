@@ -307,37 +307,23 @@ def flagship_stream(
     transactions: DataFrame, rates: DataFrame, categories: DataFrame
 ) -> DataFrame:
     """The reference pipeline (glue_job.py:78-153) as a STREAM: the
-    identical expression tree as ``plans.flagship.flagship_query`` —
-    currency conversion (broadcast stream-static join against the
-    ``max_by``-collapsed rates), category enrichment (broadcast
-    stream-static left join), calendar derivation, 13-col contract —
-    applied to a streaming fact. Zero duplicated logic: the batch
-    builders are called verbatim; only the read/write edges differ.
+    batch enrichment step ``plans.flagship.enrich`` (currency
+    conversion against the ``max_by``-collapsed rates, category
+    enrichment, calendar derivation, 13-col contract) applied to a
+    streaming fact; only the read/write edges differ from the batch
+    flagship.
 
     Scale shape: the rates join is a stream-static broadcast against
     a provably bounded (one-row-per-currency) side; the categories
-    side derives from ``part``, which scales with the corpus, so —
-    exactly as in the batch flagship (plans/flagship.py) — it gets
-    the size-gated ``maybe_broadcast`` rather than a forced hint.
-    Stream-static joins re-resolve the static subtree per
-    micro-batch, but the gate itself runs once at plan-construction
-    time on the static DataFrame (driver-side plan metadata, no job),
-    so there is no per-batch cost. At tested scales both joins plan
-    as broadcasts and each micro-batch stays map-only — no state
-    store, no shuffle; at 100 TB the categories side becomes
-    demotable by threshold + AQE instead of an executor OOM."""
-    from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
-    from bigdata_pipelines_aws_glue_spark.plans.flagship import (
-        OUTPUT_CONTRACT,
-        convert_currency,
-        derive_time_columns,
-    )
+    side gets the size-gated ``maybe_broadcast``. Stream-static joins
+    re-resolve the static subtree per micro-batch, but the gate itself
+    runs once at plan-construction time on the static DataFrame
+    (plan metadata, no job), so there is no per-batch cost. At tested
+    scales both joins plan as broadcasts and each micro-batch stays
+    map-only — no state store, no shuffle."""
+    from bigdata_pipelines_aws_glue_spark.plans.flagship import enrich
 
-    converted = convert_currency(transactions, rates)
-    enriched = converted.join(
-        maybe_broadcast(categories), on="product_id", how="left"
-    )
-    return derive_time_columns(enriched).select(*OUTPUT_CONTRACT)
+    return enrich(transactions, rates, categories)
 
 
 def run_batch_id_sink(

@@ -58,7 +58,7 @@ def test_blocked_near_dup_full_recall_on_duplicates(spark, sf_dir):
     )
     got = {
         (r["vec_a"], r["vec_b"])
-        for r in embedding_near_dup_pairs(doubled, blocked=True).collect()
+        for r in embedding_near_dup_pairs(doubled).collect()
     }
     expected = {
         (r["vec_id"], r["vec_id"] + DUP_OFFSET) for r in emb.collect()
